@@ -693,76 +693,35 @@ def pq_topk(
 ) -> DataFrame:
     """Asymmetric-distance (ADC) search over a PQ code frame: per
     query, a lookup table of query-subvector→codebook distances is
-    built once, every corpus vector scores as m table lookups (never
-    touching the original floats), the ADC top-``rerank`` candidates
-    are re-ranked by exact cosine, and the top-``k`` survive.
+    built once on the driver (:func:`_query_luts`), every corpus vector
+    scores as m table lookups (never touching the original floats), the
+    ADC top-``rerank`` candidates are re-ranked by exact cosine, and the
+    top-``k`` survive.
 
-    Scale shape: the ADC scan computes per-row lookups map-side (query
-    vectors ride a broadcast), then the frame is projected down to
-    ``(query_id, neighbor_id, __adc)`` — id + id + one double — BEFORE
-    the per-query rank window, so the only |corpus|-sized exchange in
-    the plan carries ~20 bytes/row, never the float vectors (the r7
-    plan shipped the 64-float ``__cvec`` + ``__qvec`` through that
-    exchange, ~100× wider — the one defect the r7 audit graded weak).
-    The surviving candidate set is bounded by |queries| × ``rerank``
-    rows, so it broadcasts; the exact-cosine pass fetches the full
-    vectors via a broadcast-hash semi-lookup against the code frame —
-    one more corpus scan, zero corpus shuffle. A pinned plan property
+    Scale shape: the ≤ |queries|-row LUT frame is broadcast and the ADC
+    scan computes per-row lookups map-side, then the frame is projected
+    down to ``(query_id, neighbor_id, __adc)`` — id + id + one double —
+    BEFORE the per-query rank window, so the only |corpus|-sized
+    exchange in the plan carries ~20 bytes/row, never the float vectors
+    (the r7 plan shipped the 64-float ``__cvec`` + ``__qvec`` through
+    that exchange, ~100× wider — the one defect the r7 audit graded
+    weak). The surviving candidate set is bounded by |queries| ×
+    ``rerank`` rows, so it broadcasts; the exact-cosine pass fetches the
+    full vectors via a broadcast-hash semi-lookup against the code frame
+    — one more corpus scan, zero corpus shuffle. A pinned plan property
     (tests/test_plans.py) keeps the exchange skinny."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    luts, _ = _query_luts(queries, id_col, vec_col, books)
+    return _adc_topk(
+        coded.crossJoin(F.broadcast(luts)), books, coded, queries, id_col,
+        vec_col, k=k, rerank=rerank,
     )
-    scored = (
-        coded.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc_col(
-                books, F.col("__qvec").cast("array<double>"), F.col("__codes")
-            ).alias("__adc"),
-        )
-    )
-    return _adc_rank_and_rerank(scored, coded, q, k=k, rerank=rerank)
-
-
-def _adc_udf(books: np.ndarray):
-    """Arrow-batched ADC scorer: per distinct query vector in the batch,
-    one (m, n_codes) lookup table of subvector→codebook distances; each
-    row then scores as m table lookups. The codebooks ride the closure
-    (kilobytes).
-
-    r15: RETIRED from every probe plan in favor of :func:`_adc_col`
-    (the JVM expression form — no Python boundary on the ADC scan).
-    Kept as the reference implementation: the bit-equality pin
-    (tests/test_r15_optimizations.py) evaluates both forms on the same
-    frame and compares raw float64 bit patterns."""
-    m, n_codes, sub = books.shape
-
-    @F.pandas_udf("double")
-    def adc(qvs: pd.Series, codes: pd.Series) -> pd.Series:
-        luts: dict[bytes, np.ndarray] = {}
-        out = np.empty(len(qvs), dtype=np.float64)
-        C = np.array(list(codes), dtype=np.int64)
-        Q = np.array(list(qvs), dtype=np.float64)
-        keys = [q.tobytes() for q in Q]
-        for i, key in enumerate(keys):
-            lut = luts.get(key)
-            if lut is None:
-                qs = Q[i].reshape(m, sub)
-                lut = ((qs[:, None, :] - books) ** 2).sum(-1)  # (m, n_codes)
-                luts[key] = lut
-            out[i] = lut[np.arange(m), C[i]].sum()
-        return pd.Series(out)
-
-    return adc
 
 
 def _np_pairwise_sum(terms: list[Column]) -> Column:
     """Combine double-typed addend Columns in EXACTLY numpy's pairwise-
     summation order (numpy/_core/src/umath/loops.c.src,
     ``pairwise_sum_DOUBLE``), so a JVM expression sum is bit-identical
-    to the ``ndarray.sum()`` the retired ADC UDF performed:
+    to the ``ndarray.sum()`` the reference ADC UDF performs:
 
     - n < 8: plain sequential left-to-right adds;
     - 8 ≤ n ≤ 128 (numpy's PW_BLOCKSIZE): eight running accumulators
@@ -799,63 +758,126 @@ def _np_pairwise_sum(terms: list[Column]) -> Column:
     return _np_pairwise_sum(terms[:n2]) + _np_pairwise_sum(terms[n2:])
 
 
-def _adc_col(books: np.ndarray, qvec: Column, codes: Column) -> Column:
-    """JVM ADC scorer (r15, guide §4 "prefer built-ins"): the same
-    asymmetric distance the retired Arrow UDF computed —
-    ``Σ_s ‖q[s·sub:(s+1)·sub] − books[s, codes[s]]‖²`` — as ONE scalar
-    Catalyst expression, so the probe's corpus scan never crosses the
-    JVM↔Python boundary (the UDF shipped the 64-double query vector
-    plus the code array through Arrow for EVERY scored row; the
-    expression reads both from the already-joined row inside
-    whole-stage codegen).
+def _query_luts(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    books: np.ndarray,
+    centroids: list[tuple[int, list[float]]] | None = None,
+    n_probe: int = 0,
+) -> tuple[DataFrame, list[int]]:
+    """Classic ADC lookup tables (Jégou et al. 2011 §III.A), built on
+    the driver: collect the query batch (broadcast-sized by contract;
+    one job) and compute each query's (m × n_codes) table of
+    subvector→codebook squared distances in numpy, flattened row-major
+    as ``__lut array<double>`` (entry ``s·n_codes + c``).
 
-    Economics vs the UDF's per-query lookup table: the expression
-    recomputes the subspace distances per ROW (~3·dim flops) instead
-    of m table lookups, but the flops are codegen'd JVM arithmetic on
-    in-register doubles — measured, the boundary cost the LUT
-    amortized was orders of magnitude above the re-arithmetic. (A
-    JVM-side LUT would need per-query-row array construction the
-    expression language can only bind via lambda folds — the exact
-    analysis-cost trap the r14 routing rewrite measured and rejected.)
+    With ``centroids``, each query is also routed to its ``n_probe``
+    nearest cells — one row per (query, cell),
+    ``(query_id, __cell, __lut)`` — and the second return value is the
+    sorted routed cell ids, for the store read's ``__cell IN`` pushdown.
+    Without, the frame is ``(query_id, __lut)`` and the list is empty.
+    ``query_id`` keeps its input type. The frame is built from an Arrow
+    table, so Spark plans it as a LocalRelation: broadcasting it runs
+    no job.
 
-    Bit-equality with the UDF (the values feed rank membership, so
-    ties must not move): each squared-difference term is the same IEEE
-    expression numpy evaluates (``x**2`` lowers to ``x*x`` via numpy's
-    ``fast_scalar_power``), the per-subspace sum and the final
-    cross-subspace sum reproduce numpy's pairwise order via
-    :func:`_np_pairwise_sum`, and the codebooks ride the plan as ONE
-    flat array<double> literal shared by reference across the 64
-    ``element_at`` accesses. Pinned bit-for-bit by
-    tests/test_r15_optimizations.py.
+    Why the driver: the batch is already broadcast-sized, and the
+    Spark-side forms cost a fixed price per probe that no data size
+    amortizes — routing by crossJoin + ``zip_with``/``aggregate`` fold
+    + window needed a checkpoint and a collect (4 jobs, ~1 s of Column
+    construction), and scoring against codebook literals built
+    m·n_codes·sub literal Columns. The values are the same bits:
 
-    ``qvec`` must already be ``array<double>`` (callers cast, exactly
-    as they did for the UDF); ``codes`` is the ``array<int>`` PQ code
-    column."""
+    - the table is the reference UDF's ``((q_s − books)**2).sum(-1)``,
+      same layout, so the same pairwise order;
+    - the routing distance ``cumsum((q−c)·(q−c))[-1]`` is the left fold
+      ``acc + x`` from 0.0 that ``aggregate`` ran, and ``lexsort`` on
+      ``(d2, cell)`` is the routing window's order, so a query
+      equidistant from two centroids routes to the lower cell id."""
+    import pyarrow as pa
+
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("__qvec"),
+    )
+    rows = q.collect()
+    nq = len(rows)
     m, n_codes, sub = books.shape
-    flat = F.lit([float(x) for x in books.reshape(-1)])
-    lut_terms = []
-    for s in range(m):
-        # 1-based element_at into the flat (m·n_codes·sub) codebook:
-        # entry j of codebook (s, codes[s]) sits at s·n_codes·sub +
-        # codes[s]·sub + j. codes[s] is bounds-checked by construction
-        # (pq_encode emits argmin indices < n_codes).
-        base = F.lit(s * n_codes * sub + 1) + codes[s] * F.lit(sub)
-        diff_sq = []
-        for j in range(sub):
-            d = qvec[s * sub + j] - F.element_at(flat, base + F.lit(j))
-            diff_sq.append(d * d)
-        lut_terms.append(_np_pairwise_sum(diff_sq))
-    return _np_pairwise_sum(lut_terms)
+    Q = np.array([r["__qvec"] for r in rows], dtype=np.float64).reshape(
+        nq, m * sub
+    )
+    width = m * n_codes
+    luts = ((Q.reshape(nq, m, 1, sub) - books) ** 2).sum(-1).reshape(nq, width)
+    fields = [T.StructField("query_id", q.schema["query_id"].dataType)]
+    cell_col = []
+    take = np.arange(nq)  # LUT row of each output row
+    cells: list[int] = []
+    if centroids is not None:
+        cell_ids = np.array([c for c, _ in centroids], dtype=np.int64)
+        C = np.array([v for _, v in centroids], dtype=np.float64)
+        d = Q[:, None, :] - C[None, :, :]
+        d2 = np.cumsum(d * d, axis=-1)[..., -1]
+        near = cell_ids[
+            np.lexsort((np.broadcast_to(cell_ids, d2.shape), d2))[:, :n_probe]
+        ]
+        take = np.repeat(take, near.shape[1])
+        cells = sorted(set(near.ravel().tolist()))
+        fields.append(T.StructField("__cell", T.IntegerType()))
+        cell_col = [pa.array(near.ravel(), pa.int32())]
+    fields.append(T.StructField("__lut", T.ArrayType(T.DoubleType())))
+    table = pa.table(
+        [
+            pa.array([r["query_id"] for r in rows]).take(take),
+            *cell_col,
+            pa.ListArray.from_arrays(
+                np.arange(0, len(take) * width + 1, width, dtype=np.int32),
+                luts[take].ravel(),
+            ),
+        ],
+        names=[f.name for f in fields],
+    )
+    return (
+        queries.sparkSession.createDataFrame(table, schema=T.StructType(fields)),
+        cells,
+    )
 
 
-def _adc_rank_and_rerank(
-    scored: DataFrame, coded: DataFrame, q: DataFrame, *, k: int, rerank: int
+def _adc_score(books: np.ndarray) -> Column:
+    """The ADC distance of a row holding ``__codes`` and its query's
+    ``__lut``: ``Σ_s __lut[s·n_codes + __codes[s]]`` — m ``element_at``
+    lookups summed in numpy's pairwise order (:func:`_np_pairwise_sum`),
+    so the score is the reference UDF's ``lut[arange(m), codes].sum()``
+    bit for bit (pinned by tests/test_r15_optimizations.py), with no
+    Python on the corpus side: about 3m Column nodes whatever the
+    codebook size."""
+    m, n_codes, _ = books.shape
+    lut, codes = F.col("__lut"), F.col("__codes")
+    return _np_pairwise_sum(
+        [F.element_at(lut, codes[s] + (s * n_codes + 1)) for s in range(m)]
+    )
+
+
+def _adc_topk(
+    joined: DataFrame,
+    books: np.ndarray,
+    rerank_vecs: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *,
+    k: int,
+    rerank: int,
 ) -> DataFrame:
-    """Shared PQ tail: per-query ADC rank cut on the SKINNY
-    ``(query_id, neighbor_id, __adc)`` frame, then the exact-cosine
-    re-rank over the broadcast-bounded candidate set (≤ |queries| ×
-    ``rerank`` rows) — the floats come back via a broadcast-hash join
-    against the code frame: one more corpus scan, zero corpus shuffle."""
+    """Shared PQ tail over code rows joined to their queries' LUT rows:
+    drop self-pairs, score (:func:`_adc_score`), cut each query's ADC
+    top-``rerank`` on the SKINNY ``(query_id, neighbor_id, __adc)``
+    frame, then exact-cosine re-rank the broadcast-bounded candidate
+    set (≤ |queries| × ``rerank`` rows): the floats come back via a
+    broadcast-hash join against ``rerank_vecs`` ``(neighbor_id,
+    __cvec)`` — one more corpus scan, zero corpus shuffle."""
+    scored = joined.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", _adc_score(books).alias("__adc")
+    )
     wa = Window.partitionBy("query_id").orderBy(
         F.col("__adc").asc(), F.col("neighbor_id").asc()
     )
@@ -864,8 +886,11 @@ def _adc_rank_and_rerank(
         .filter(F.col("__ar") <= rerank)
         .select("query_id", "neighbor_id")
     )
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    )
     rerank_rows = (
-        coded.select("neighbor_id", "__cvec")
+        rerank_vecs.select("neighbor_id", "__cvec")
         .join(F.broadcast(cands), "neighbor_id")
         .join(F.broadcast(q), "query_id")
         .select(
@@ -911,11 +936,12 @@ def ivfpq_topk(
     depth, and raw codes keep ONE codebook set instead of per-cell
     ones).
 
-    Scale shape: the routed query table is |queries| × n_probe rows →
-    broadcast; the cell join + ADC scoring run map-side over the code
+    Scale shape: the routed LUT table is |queries| × n_probe rows →
+    broadcast; the cell join + ADC lookups run map-side over the code
     frame; the per-query rank exchange carries (query_id, neighbor_id,
     __adc) only — same skinny-exchange contract as :func:`pq_topk`,
-    covered by the same plan pin."""
+    covered by the same plan pin. The composition is
+    :func:`ivfpq_probe_index` over the freshly built index."""
     assigned, cdf = ivf_build(
         corpus, id_col, vec_col, n_centroids=n_centroids, seed=seed
     )
@@ -931,41 +957,13 @@ def ivfpq_topk(
         seed=seed,
         keep=("__cell",),
     )
-    coded = index.select("neighbor_id", "__cvec", "__codes")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    cents = [
+        (int(r["__cell"]), list(r["__centroid"])) for r in cdf.collect()
+    ]  # ≤ n_centroids rows
+    return ivfpq_probe_index(
+        index, books, cents, queries, id_col, vec_col, index,
+        k=k, n_probe=n_probe, rerank=rerank,
     )
-    dist2 = F.aggregate(
-        F.zip_with(
-            F.col("__qvec").cast("array<double>"),
-            F.col("__centroid"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("__d2").asc(), F.col("__cell").asc()
-    )
-    routed = (
-        q.crossJoin(F.broadcast(cdf))
-        .withColumn("__d2", dist2)
-        .withColumn("__cr", F.row_number().over(wc))
-        .filter(F.col("__cr") <= n_probe)
-        .select("query_id", "__qvec", "__cell")
-    )
-    scored = (
-        index.join(F.broadcast(routed), "__cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc_col(
-                books, F.col("__qvec").cast("array<double>"), F.col("__codes")
-            ).alias("__adc"),
-        )
-    )
-    return _adc_rank_and_rerank(scored, coded, q, k=k, rerank=rerank)
 
 
 # ------------------------------------------- persisted IVF-PQ index ----
@@ -1223,58 +1221,24 @@ def ivfpq_store_append(
     )
 
 
-def _ivfpq_pruned_codes(spark, store_root: str, cells: list[int]) -> DataFrame:
+def _ivfpq_pruned_codes(
+    spark, store_root: str, cells: list[int], id_type: T.DataType
+) -> DataFrame:
     """The probe's index read: routed cell ids pushed as a ``__cell
     IN (…)`` parquet filter onto the clustered codes tier — row groups
     of unrouted cells are never read (plan-pinned on THIS frame, the
-    _bm25_pruned_postings pattern)."""
+    _bm25_pruned_postings pattern). The tier is read with its known
+    layout (:func:`ivfpq_store_append` writes it; ``id_type`` is the
+    corpus id type the neighbor ids were appended with), so opening
+    the probe runs no parquet schema-inference job."""
     from lab3_lakehouse_spark import stores
 
-    return stores.pruned_read(
-        spark, store_root, "codes", "__cell", [int(c) for c in cells]
+    schema = (
+        f"neighbor_id {id_type.simpleString()}, __cell int, "
+        "__codes array<int>"
     )
-
-
-def _routed_query_frame(
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[tuple[int, list[float]]],
-    n_probe: int,
-) -> DataFrame:
-    """``(query_id, __qvec, __cell)`` — each query paired with its
-    ``n_probe`` nearest cells: crossJoin against the broadcast
-    ≤ n_centroids-row centroid frame, L2² fold, per-query
-    ``row_number`` cut. Factored out in r14 so a store probe computes
-    the routing ONCE (checkpointed, |queries|·n_probe bounded) instead
-    of once for the pushdown-cell collect and again inside the probe
-    plan. (A map-side literal-centroid variant was measured and
-    rejected: 16 zip_with/aggregate lambda folds per plan cost more in
-    analysis than the tiny broadcast-join window saves — 1.4 s vs
-    0.7 s per routing at sf0.1.)"""
-    spark = queries.sparkSession
-    cdf = spark.createDataFrame(centroids, ["__cell", "__centroid"])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    dist2 = F.aggregate(
-        F.zip_with(
-            F.col("__qvec").cast("array<double>"),
-            F.col("__centroid"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("__d2").asc(), F.col("__cell").asc()
-    )
-    return (
-        q.crossJoin(F.broadcast(cdf))
-        .withColumn("__d2", dist2)
-        .withColumn("__cr", F.row_number().over(wc))
-        .filter(F.col("__cr") <= n_probe)
-        .select("query_id", "__qvec", "__cell")
+    return stores.read_tier(spark, store_root, "codes", schema=schema).filter(
+        F.col("__cell").isin([int(c) for c in cells])
     )
 
 
@@ -1290,38 +1254,22 @@ def ivfpq_probe_index(
     k: int = 5,
     n_probe: int = 8,
     rerank: int = 50,
-    routed: DataFrame | None = None,
 ) -> DataFrame:
     """Probe an IVF-PQ code frame (in-memory or store-pruned): route
-    each query to its ``n_probe`` nearest cells against the broadcast
-    centroid table (:func:`_routed_query_frame`), ADC-score ONLY those
-    cells' codes (skinny ``(query_id, neighbor_id, __adc)`` exchange —
-    the pq_topk contract), exact-cosine re-rank of the bounded
-    candidate set against ``rerank_vecs`` ``(neighbor_id, __cvec)`` —
-    the corpus tier, NOT the index: codes stay 4-16 bytes/vector and
-    floats are only fetched for ≤ |queries|·rerank rows. ``routed``
-    (r14): a pre-computed (ideally checkpointed) routing frame — the
-    store probe passes the one it already collected pushdown cells
-    from, so the routing window runs once per probe, not twice."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    each query to its ``n_probe`` nearest cells and build its ADC
+    lookup table on the driver (:func:`_query_luts`), join the
+    broadcast ``(query_id, __cell, __lut)`` rows to ONLY those cells'
+    codes and score by table lookup (skinny ``(query_id, neighbor_id,
+    __adc)`` exchange — the pq_topk contract), then exact-cosine
+    re-rank the bounded candidate set against ``rerank_vecs``
+    ``(neighbor_id, __cvec)`` — the corpus tier, NOT the index: codes
+    stay 4-16 bytes/vector and floats are only fetched for
+    ≤ |queries|·rerank rows."""
+    luts, _ = _query_luts(queries, id_col, vec_col, books, centroids, n_probe)
+    return _adc_topk(
+        index.join(F.broadcast(luts), "__cell"), books, rerank_vecs,
+        queries, id_col, vec_col, k=k, rerank=rerank,
     )
-    if routed is None:
-        routed = _routed_query_frame(
-            queries, id_col, vec_col, centroids, n_probe
-        )
-    scored = (
-        index.join(F.broadcast(routed), "__cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc_col(
-                books, F.col("__qvec").cast("array<double>"), F.col("__codes")
-            ).alias("__adc"),
-        )
-    )
-    return _adc_rank_and_rerank(scored, rerank_vecs, q, k=k, rerank=rerank)
 
 
 def ivfpq_store_topk(
@@ -1338,41 +1286,50 @@ def ivfpq_store_topk(
     meta: tuple[list[tuple[int, list[float]]], np.ndarray] | None = None,
 ) -> DataFrame:
     """ANN top-k against the PERSISTED IVF-PQ index: load the two
-    metadata tiers (bounded), route the query batch, and read ONLY the
-    routed cells' row groups from the clustered codes tier (``__cell
-    IN`` pushdown — an index probe, not an index scan); the exact
-    re-rank fetches its ≤ |queries|·rerank float vectors from the
-    corpus tier via broadcast lookup. At 100 TB the init+append cost
-    amortizes across every query batch that ever probes the store.
-    ``meta`` (r14): pre-loaded ``(cents, books)`` skips the two
-    tier-read collects — a probe SWEEP over one store (the recall
-    frontier) loads the kilobyte tiers once, not once per setting."""
+    metadata tiers (bounded), route the query batch and build its ADC
+    tables on the driver (:func:`_query_luts` — given ``meta``, the
+    only job before the action), and read ONLY the routed cells' row groups from the
+    clustered codes tier (``__cell IN`` pushdown — an index probe, not
+    an index scan); the exact re-rank fetches its ≤ |queries|·rerank
+    float vectors from the corpus tier via broadcast lookup. At 100 TB
+    the init+append cost amortizes across every query batch that ever
+    probes the store. ``meta`` (r14): pre-loaded ``(cents, books)``
+    skips the two tier-read collects — a probe SWEEP over one store
+    (the recall frontier) loads the kilobyte tiers once, not once per
+    setting.
+
+    Every code row read must match ``meta``'s shape: exactly m codes,
+    each below n_codes. A stale row (encoded under other params) would
+    otherwise read another subspace's table slice and score silently
+    wrong, or score null and rank first; the probe fails inside its
+    own plan instead (no extra job), naming ``store_root``."""
     cents, books = meta if meta is not None else ivfpq_load_meta(
         spark, store_root
     )
-    # route first so the store read can prune: nearest n_probe cells
-    # per query. ONE routing computation serves both consumers (r14):
-    # the checkpointed |queries|·n_probe frame feeds the pushdown-cell
-    # collect here AND rides into the probe plan below — the r13 form
-    # ran the same crossJoin + window twice per probe.
-    routed = _routed_query_frame(
-        queries, id_col, vec_col, cents, n_probe
-    ).localCheckpoint(eager=False)  # bounded: |queries| x n_probe rows;
-    # lazy — the cells collect right below materializes it, so the
-    # checkpoint adds no job of its own
-    routed_cells = [
-        int(r["__cell"])
-        for r in (
-            routed.select("__cell").distinct().collect()
-            # ≤ n_centroids rows — bounded metadata
-        )
-    ]
-    pruned = _ivfpq_pruned_codes(spark, store_root, routed_cells)
+    m, n_codes, _ = books.shape
+    luts, cells = _query_luts(queries, id_col, vec_col, books, cents, n_probe)
     rerank_vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
     )
-    return ivfpq_probe_index(
-        pruned, books, cents, queries, id_col, vec_col, rerank_vecs,
-        k=k, n_probe=n_probe, rerank=rerank, routed=routed,
+    codes = F.col("__codes")
+    fresh = (F.size(codes) == m) & (F.array_max(codes) < n_codes)
+    pruned = _ivfpq_pruned_codes(
+        spark, store_root, cells, rerank_vecs.schema["neighbor_id"].dataType
+    ).withColumn(
+        "__codes",
+        F.when(fresh, codes).otherwise(
+            F.raise_error(
+                F.lit(
+                    f"ivfpq_store_topk: store {store_root!r} holds a code "
+                    f"row that is not {m} codes below {n_codes} — the "
+                    "codes tier was encoded under other params than the "
+                    "probe's metadata"
+                )
+            )
+        ),
+    )
+    return _adc_topk(
+        pruned.join(F.broadcast(luts), "__cell"), books, rerank_vecs,
+        queries, id_col, vec_col, k=k, rerank=rerank,
     )

@@ -430,9 +430,9 @@ def stream_ivfpq_append(
     cannot change which TRUE neighbors exist; the globally-unique-id
     store contract applies, and offline GC can dedup by id. Returns
     the started StreamingQuery."""
-    import os
-
+    from lab3_lakehouse_spark import stores
     from lab3_lakehouse_spark.operators import similarity as sim_ops
+    from lab3_lakehouse_spark.sources.versioned import _fs
 
     checkpoint = f"{store_root}/_checkpoint"
     # the quantizer metadata is FROZEN during ingestion by contract
@@ -441,8 +441,11 @@ def stream_ivfpq_append(
     # micro-batch (r14 — two bounded collects per trigger removed).
     # Explicit existence check (r14 advice): fail at setup with the
     # ordering requirement, not with a parquet path error mid-load.
+    # Probed through the Hadoop FileSystem, so any store URI scheme
+    # (s3a://, hdfs://, file://, bare local paths) is checked the same.
+    fs, jpath = _fs(spark, store_root)
     for tier in ("centroids", "codebooks"):
-        if not os.path.isdir(os.path.join(store_root, tier)):
+        if not fs.exists(jpath(stores.tier_path(store_root, tier))):
             raise ValueError(
                 f"stream_ivfpq_append: store {store_root!r} has no "
                 f"'{tier}' tier — run ivfpq_store_init BEFORE creating "

@@ -9,6 +9,7 @@ import hashlib
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lab3_lakehouse_spark.operators import dedup as dedup_ops
 from lab3_lakehouse_spark.operators import multimodal as mm_ops
@@ -887,7 +888,7 @@ def test_ivfpq_store_probe_prunes_to_routed_cells(
         n_centroids=8, dim=32, m=8, n_codes=16,
     )
     sim_ops.ivfpq_store_append(spark, root, emb, "vec_id", "embedding")
-    pruned = sim_ops._ivfpq_pruned_codes(spark, root, [0, 3])
+    pruned = sim_ops._ivfpq_pruned_codes(spark, root, [0, 3], T.LongType())
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "In(__cell" in plan, plan
     # and the probe itself produces rows through that path

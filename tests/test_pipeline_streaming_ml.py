@@ -1539,6 +1539,43 @@ def test_stream_ivfpq_append_equals_batch_store(spark, tmpdir):
     assert got == want and len(got) == 15
 
 
+def test_stream_ivfpq_append_accepts_uri_store_root(spark, tmpdir):
+    """The stream's store-initialized check probes through the Hadoop
+    FileSystem: a ``file://`` store root that ivfpq_store_init has
+    populated starts ingesting (an os.path check rejected every URI
+    root — s3a://, hdfs://, file:// — as uninitialized), and a root
+    with no tiers still fails at setup naming the ordering rule."""
+    import json as _json
+
+    import numpy as np
+
+    from lab3_lakehouse_spark import stores
+    from lab3_lakehouse_spark.operators import similarity as sim_ops
+    from lab3_lakehouse_spark.streaming import ingest as st_ingest
+
+    rng = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    src = f"{tmpdir}/ivfpq_uri_src"
+    os.makedirs(src)
+    with open(f"{src}/f0.json", "w") as f:
+        f.write("\n".join(
+            _json.dumps({"vec_id": vid, "embedding": vec}) for vid, vec in rows
+        ))
+    root = f"file://{tmpdir}/ivfpq_uri_store"
+    sim_ops.ivfpq_store_init(
+        root, emb, "vec_id", "embedding", n_centroids=2, dim=8, m=2, n_codes=4,
+    )
+    q = st_ingest.stream_ivfpq_append(spark, src, root)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert stores.read_tier(spark, root, "codes").count() == 40
+    with pytest.raises(ValueError, match="run ivfpq_store_init BEFORE"):
+        st_ingest.stream_ivfpq_append(spark, src, f"file://{tmpdir}/no_store")
+
+
 def test_stream_sample_append_equals_one_shot_draw(spark, tmpdir):
     """The streamed uniform-sample tier (bottom-k append per
     micro-batch, streaming/ingest.stream_sample_append) must draw the

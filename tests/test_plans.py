@@ -568,8 +568,8 @@ def test_pq_adc_rank_exchange_is_skinny(spark, sf):
         assert ranked, exchanges  # rank windows must still shuffle on query_id
         for args, cols in exchanges:
             # pin CORPUS-sized exchanges (those carrying neighbor_id);
-            # the IVF query-routing window shuffles a bounded
-            # |queries| x n_centroids frame and may carry __qvec
+            # query-side frames are |queries|-bounded and may carry
+            # __qvec
             if "neighbor_id" in cols:
                 assert not (set(cols) & forbidden), (args, cols)
 
