@@ -75,22 +75,27 @@ def train_random_forest(
     assembler = VectorAssembler(inputCols=feature_cols, outputCol="features")
     # cache BEFORE randomSplit: split sampling is per-partition, and an
     # uncached upstream agg can recompute with different row order per
-    # action, silently losing/duplicating rows between train and test
+    # action, silently losing/duplicating rows between train and test;
+    # released once the last metric and count are in, so a call leaves
+    # nothing in executor storage
     vec = assembler.transform(features).select("features", "label").cache()
-    train, test = vec.randomSplit([0.8, 0.2], seed=seed)
-    model = RandomForestRegressor(
-        numTrees=num_trees, seed=seed, labelCol="label", featuresCol="features"
-    ).fit(train)
-    pred = model.transform(test)
-    ev = RegressionEvaluator(labelCol="label", predictionCol="prediction")
-    result = FitResult(
-        model=model,
-        mae=ev.setMetricName("mae").evaluate(pred),
-        rmse=ev.setMetricName("rmse").evaluate(pred),
-        r2=ev.setMetricName("r2").evaluate(pred),
-        n_train=train.count(),
-        n_test=test.count(),
-    )
+    try:
+        train, test = vec.randomSplit([0.8, 0.2], seed=seed)
+        model = RandomForestRegressor(
+            numTrees=num_trees, seed=seed, labelCol="label", featuresCol="features"
+        ).fit(train)
+        pred = model.transform(test)
+        ev = RegressionEvaluator(labelCol="label", predictionCol="prediction")
+        result = FitResult(
+            model=model,
+            mae=ev.setMetricName("mae").evaluate(pred),
+            rmse=ev.setMetricName("rmse").evaluate(pred),
+            r2=ev.setMetricName("r2").evaluate(pred),
+            n_train=train.count(),
+            n_test=test.count(),
+        )
+    finally:
+        vec.unpersist()
     _maybe_log_mlflow(result, num_trees=num_trees, seed=seed)
     return result
 

@@ -115,7 +115,7 @@ def refresh_rollup(
     if not table_exists(spark, path, fmt):
         medallion.materialize(delta, path, fmt=fmt)
         return
-    target = spark.read.format(fmt).load(path)
+    target = medallion.read_tier(spark, path, fmt)
     dirty = target.join(F.broadcast(delta.select(*merge_keys)), merge_keys, "left_semi")
     combined = combine_partials(dirty.unionByName(delta), keys)
     medallion.merge_into(spark, path, combined, merge_keys, fmt=fmt)

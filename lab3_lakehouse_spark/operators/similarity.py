@@ -778,8 +778,8 @@ def _query_luts(
     sorted routed cell ids, for the store read's ``__cell IN`` pushdown.
     Without, the frame is ``(query_id, __lut)`` and the list is empty.
     ``query_id`` keeps its input type. The frame is built from an Arrow
-    table, so Spark plans it as a LocalRelation: broadcasting it runs
-    no job.
+    table, so Spark plans it as a LocalRelation: broadcasting it reads
+    no source, though the broadcast still collects its rows in one job.
 
     Why the driver: the batch is already broadcast-sized, and the
     Spark-side forms cost a fixed price per probe that no data size

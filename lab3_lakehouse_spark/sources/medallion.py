@@ -19,15 +19,27 @@ and restartable. The engine keeps that property but generalizes:
   on the cluster columns), which gives parquet min/max row-group
   skipping on the same columns — the same data-skipping goal by
   parquet-native means.
+
+Parquet tiers written here carry their data schema in a
+``_tier_schema.json`` record next to the data files (Delta keeps the
+same record in its log), so :func:`read_tier` opens a tier without a
+schema-inference job; see :func:`materialize` for its lifecycle.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: the tier's recorded data schema (``StructType.json()``). The leading
+#: ``_`` makes Spark's file index skip it; ``_metadata`` and
+#: ``_common_metadata`` would be read as Parquet summary files.
+SCHEMA_FILE = "_tier_schema.json"
 
 
 def _delta_available() -> bool:
@@ -104,15 +116,38 @@ def materialize(
       (incremental backfill: rewriting one day must not clobber the
       other 3 649 days of a 10-year tier). Per-writer option, so it
       never leaks session-wide config.
+
+    Schema record: a parquet tier keeps its data schema (``df``'s,
+    less the ``partition_by`` columns, all nullable as the file writer
+    stores it) in ``_tier_schema.json`` beside the data files, taken
+    from ``df`` — recording it runs no job. :func:`read_tier` passes it
+    to the reader; partition discovery still types the partition
+    columns from the directory names, so the read returns what
+    inference would. The record is deleted before every write. A
+    whole-tier overwrite writes a new one afterwards; an append or a
+    dynamic partition overwrite restores it only when the written
+    schema equals the recorded one, and otherwise leaves the tier to
+    inference. ``merge_into``, ``compact_tier`` and ``optimize_table``
+    record what they rewrite. A foreign ``df.write.mode("overwrite")``
+    deletes the directory, record included; a foreign writer that
+    APPENDS to a tier must delete ``_tier_schema.json`` itself, or
+    reads keep the old schema. Delta tiers keep no record (their log
+    is one), and neither do Spark Connect sessions (no JVM handle to
+    the filesystem): those reads infer.
     """
     writer = _layout(
         df, partition_by, cluster_by, target_partitions
     ).write.format(fmt).mode(mode)
+    dynamic = False
     if partition_by:
         writer = writer.partitionBy(*partition_by)
         if dynamic_partition_overwrite:
             writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.save(path)
+        dynamic = dynamic_partition_overwrite or df.sparkSession.conf.get(
+            "spark.sql.sources.partitionOverwriteMode", "static"
+        ).lower() == "dynamic"
+    whole = mode.lower() == "overwrite" and not dynamic
+    _save(writer, df, path, fmt, partition_by, whole=whole)
 
 
 def materialize_bucketed(
@@ -225,7 +260,7 @@ def merge_into(
             m = m.whenMatchedDelete(condition=delete_condition)
         m.whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
         return
-    snapshot = spark.read.format(fmt).load(path)
+    snapshot = read_tier(spark, path, fmt)
     merged = merge_upsert(
         snapshot, source, keys,
         delete_condition=delete_condition, broadcast_source=broadcast_source,
@@ -235,7 +270,7 @@ def merge_into(
     # via a same-filesystem rename (works on HDFS/S3A-committer/local;
     # the delete→rename window is the non-transactional cost vs Delta)
     staging = path.rstrip("/") + ".__staging__"
-    merged.write.format(fmt).mode("overwrite").save(staging)
+    _save(merged.write.format(fmt).mode("overwrite"), merged, staging, fmt)
     fs, jpath = _hadoop_fs(spark, path)
     fs.delete(jpath(path), True)
     fs.rename(jpath(staging), jpath(path))
@@ -253,6 +288,72 @@ def _hadoop_fs(spark: SparkSession, path: str):
         )
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     return jpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable:
+    the schema Spark's file writer stores in the footer."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _schema_file(spark: SparkSession, path: str, fmt: str):
+    """``(fs, Path)`` of the tier's schema record, or None where no
+    record is kept: non-parquet formats, and Spark Connect sessions,
+    which have no JVM handle to the filesystem."""
+    if fmt != "parquet" or getattr(spark, "_jvm", None) is None:
+        return None
+    fs, jpath = _hadoop_fs(spark, path)
+    return fs, jpath(f"{path.rstrip('/')}/{SCHEMA_FILE}")
+
+
+def _recorded_schema(fs, at) -> str | None:
+    if not fs.exists(at):
+        return None
+    stream = fs.open(at)
+    try:
+        return bytes(stream.readAllBytes()).decode()
+    finally:
+        stream.close()
+
+
+def _save(
+    writer: DataFrameWriter,
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    partition_by: list[str] | None = None,
+    whole: bool = True,
+) -> None:
+    """``writer.save(path)`` with the tier's schema record kept in step
+    (lifecycle in :func:`materialize`). ``whole``: the write replaces
+    the entire tier, so ``df``'s schema is the tier's; otherwise the
+    record survives only if ``df``'s schema equals it."""
+    record = _schema_file(df.sparkSession, path, fmt)
+    if record is None:
+        writer.save(path)
+        return
+    fs, at = record
+    parts = {c.lower() for c in partition_by or ()}
+    schema = _nullable(
+        T.StructType([f for f in df.schema if f.name.lower() not in parts])
+    ).json()
+    keep = whole or _recorded_schema(fs, at) == schema
+    fs.delete(at, False)
+    writer.save(path)
+    if keep:
+        out = fs.create(at, True)
+        try:
+            out.write(bytearray(schema.encode()))
+        finally:
+            out.close()
 
 
 def compact_tier(
@@ -320,7 +421,7 @@ def compact_tier(
     writer = out.write.format(fmt).mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(staging)
+    _save(writer, out, staging, fmt, partition_by)
     fs.delete(jpath(path), True)
     fs.rename(jpath(staging), jpath(path))
     return {
@@ -332,8 +433,19 @@ def compact_tier(
 
 
 def read_tier(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """S2: tier scan (schema from footers/log — metadata-only)."""
-    return spark.read.format(fmt).load(path)
+    """S2: tier scan. A parquet tier written by this module carries its
+    data schema (``_tier_schema.json``, see :func:`materialize`), which
+    is passed to the reader, so opening the tier runs no Spark job;
+    partition columns are still typed from the directory names. A tier
+    without the record (a foreign writer, a Spark Connect session)
+    infers the schema from a footer as a plain ``spark.read`` does —
+    one Spark job per call; Delta reads its schema from its log."""
+    reader = spark.read.format(fmt)
+    record = _schema_file(spark, path, fmt)
+    recorded = _recorded_schema(*record) if record else None
+    if recorded:
+        reader = reader.schema(T.StructType.fromJson(json.loads(recorded)))
+    return reader.load(path)
 
 
 def morton_key(
@@ -402,7 +514,10 @@ def optimize_table(
         .sortWithinPartitions(key)
         .drop(key)
     )
-    clustered.write.format(fmt).mode("overwrite").save(path + "__clustered")
+    _save(
+        clustered.write.format(fmt).mode("overwrite"), clustered,
+        path + "__clustered", fmt,
+    )
     return "parquet-morton-cluster"
 
 

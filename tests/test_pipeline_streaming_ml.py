@@ -250,6 +250,23 @@ def test_rf_training_distributed(spark, sf_small):
     assert r.r2 <= 1.0
 
 
+def test_rf_training_releases_its_cache(spark):
+    """train_random_forest caches its assembled frame for the split and
+    unpersists it before returning: the session holds as many cached
+    RDDs after a call as before."""
+    feats = spark.range(200).select(
+        F.col("id").cast("double").alias("x"),
+        (F.col("id") * 2.0 + 1.0).alias("label"),
+    )
+
+    def n_cached() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = n_cached()
+    ml.train_random_forest(feats, num_trees=3)
+    assert n_cached() == before
+
+
 def test_pandas_day_of_week_convention(spark):
     # 2024-03-04 is a Monday → pandas dayofweek 0; 2024-03-10 Sunday → 6
     df = spark.createDataFrame(

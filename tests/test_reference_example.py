@@ -4,6 +4,7 @@ evidence: CSV -> bronze -> silver(+metrics, +clustering) -> gold -> RF."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
@@ -26,5 +27,17 @@ def test_reference_pipeline_end_to_end(spark):
         assert out["gold_daily_rows"] > 0
         assert out["rmse"] >= out["mae"] > 0
         assert out["r2"] <= 1.0
+        # every tier the pipeline wrote carries its schema record, and
+        # reads through it exactly as parquet inference does
+        from lab3_lakehouse_spark.sources.medallion import SCHEMA_FILE, read_tier
+
+        for tier in ("bronze/trips", "silver/trips_clean",
+                     "silver/trips_clean__clustered", "gold/daily_revenue",
+                     "gold/hourly_demand"):
+            path = f"{work}/{tier}"
+            assert os.path.exists(f"{path}/{SCHEMA_FILE}"), tier
+            got, want = read_tier(spark, path), spark.read.parquet(path)
+            assert got.schema == want.schema, tier
+            assert got.columns == want.columns, tier
     finally:
         shutil.rmtree(work, ignore_errors=True)
