@@ -1077,7 +1077,7 @@ def jaro_winkler_udf():
 
 
 def banded_word_jaccard_pairs(
-    docs: DataFrame, threshold: float = 0.8, n_salts: int = 16
+    docs: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """Lang- AND length-banded exact word-Jaccard pair tier — the
     SQL-replayable twin of the banded-LSH candidate source, shared by
@@ -1108,14 +1108,13 @@ def banded_word_jaccard_pairs(
     two-thirds of the ``array_intersect`` verification and made the
     lsh_banding_frontier bench bimodal (3.5 vs 9.8 s). The probe side
     therefore carries a DETERMINISTIC salt (``pmod(xxhash64(doc_id),
-    n_salts)`` — stable under task retry, guide §2.5's rand() warning)
-    and the build side replicates across the ``n_salts`` values
-    (default 16), splitting every block's pair enumeration 16 ways
-    (14 → 224 join keys); ``n_salts=1`` is the unsalted join. Each
+    16)`` — stable under task retry, guide §2.5's rand() warning) and
+    the build side replicates across the 16 salt values, splitting
+    every block's pair enumeration 16 ways (14 → 224 join keys). Each
     qualifying pair still meets exactly once (the probe row has ONE
     salt; the build row exists at every salt), so the pair SET — and
     every downstream dup-family result — is unchanged. Cost: build-side
-    shuffle bytes ×``n_salts``; at 100 TB this tier is the bounded
+    shuffle bytes ×16; at 100 TB this tier is the bounded
     oracle-replay twin (the at-scale path samples blocks — see the
     lsh_banding_frontier docstring), so the replication is bounded by
     the sample, not the corpus.
@@ -1130,8 +1129,6 @@ def banded_word_jaccard_pairs(
             "integer size-ratio guard 5*min>=4*max encodes Jaccard>=4/5; "
             f"got threshold={threshold!r}"
         )
-    if n_salts < 1:
-        raise ValueError(f"banded_word_jaccard_pairs: n_salts={n_salts!r} < 1")
     t = (
         docs.select(
             "doc_id", "lang", F.array_distinct(tokens("text")).alias("w")
@@ -1139,6 +1136,7 @@ def banded_word_jaccard_pairs(
         .withColumn("n", F.size("w"))
         .withColumn("band", F.length(F.bin(F.col("n"))))
     )
+    n_salts = 16
     probe = t.withColumn(
         "pband", F.explode(F.array(F.col("band"), F.col("band") + F.lit(1)))
     ).withColumn(

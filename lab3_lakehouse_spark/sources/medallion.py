@@ -32,7 +32,7 @@ import json
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -123,31 +123,25 @@ def materialize(
     from ``df`` — recording it runs no job. :func:`read_tier` passes it
     to the reader; partition discovery still types the partition
     columns from the directory names, so the read returns what
-    inference would. The record is deleted before every write. A
-    whole-tier overwrite writes a new one afterwards; an append or a
-    dynamic partition overwrite restores it only when the written
-    schema equals the recorded one, and otherwise leaves the tier to
-    inference. ``merge_into``, ``compact_tier`` and ``optimize_table``
-    record what they rewrite. A foreign ``df.write.mode("overwrite")``
-    deletes the directory, record included; a foreign writer that
-    APPENDS to a tier must delete ``_tier_schema.json`` itself, or
-    reads keep the old schema. Delta tiers keep no record (their log
-    is one), and neither do Spark Connect sessions (no JVM handle to
-    the filesystem): those reads infer.
+    inference would. The record is deleted before every write, and
+    only a whole-tier overwrite writes a new one afterwards: after an
+    append or a dynamic partition overwrite the tier has no record and
+    reads infer. ``merge_into``, ``compact_tier`` and
+    ``optimize_table`` record what they rewrite. A foreign
+    ``df.write.mode("overwrite")`` deletes the directory, record
+    included; a foreign writer that APPENDS to a tier must delete
+    ``_tier_schema.json`` itself, or reads keep the old schema. Delta
+    tiers keep no record (their log is one), and neither do Spark
+    Connect sessions (no JVM handle to the filesystem): those reads
+    infer.
     """
-    writer = _layout(
-        df, partition_by, cluster_by, target_partitions
-    ).write.format(fmt).mode(mode)
-    dynamic = False
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-        if dynamic_partition_overwrite:
-            writer = writer.option("partitionOverwriteMode", "dynamic")
-        dynamic = dynamic_partition_overwrite or df.sparkSession.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        ).lower() == "dynamic"
-    whole = mode.lower() == "overwrite" and not dynamic
-    _save(writer, df, path, fmt, partition_by, whole=whole)
+    options = {}
+    if partition_by and dynamic_partition_overwrite:
+        options["partitionOverwriteMode"] = "dynamic"
+    _save(
+        _layout(df, partition_by, cluster_by, target_partitions), path, fmt,
+        mode=mode, partition_by=partition_by, options=options,
+    )
 
 
 def materialize_bucketed(
@@ -270,7 +264,7 @@ def merge_into(
     # via a same-filesystem rename (works on HDFS/S3A-committer/local;
     # the delete→rename window is the non-transactional cost vs Delta)
     staging = path.rstrip("/") + ".__staging__"
-    _save(merged.write.format(fmt).mode("overwrite"), merged, staging, fmt)
+    _save(merged, staging, fmt)
     fs, jpath = _hadoop_fs(spark, path)
     fs.delete(jpath(path), True)
     fs.rename(jpath(staging), jpath(path))
@@ -325,35 +319,47 @@ def _recorded_schema(fs, at) -> str | None:
 
 
 def _save(
-    writer: DataFrameWriter,
     df: DataFrame,
     path: str,
     fmt: str,
+    mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    whole: bool = True,
+    options: dict[str, str] | None = None,
 ) -> None:
-    """``writer.save(path)`` with the tier's schema record kept in step
-    (lifecycle in :func:`materialize`). ``whole``: the write replaces
-    the entire tier, so ``df``'s schema is the tier's; otherwise the
-    record survives only if ``df``'s schema equals it."""
+    """Write ``df`` to the tier at ``path`` with its schema record kept
+    in step (lifecycle in :func:`materialize`): the record is deleted
+    before the write and rewritten from ``df``'s schema only when the
+    write replaced the whole tier — an overwrite that is not a dynamic
+    partition overwrite (the ``partitionOverwriteMode`` option, or the
+    session's default)."""
+    options = options or {}
+    writer = df.write.format(fmt).mode(mode).options(**options)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
     record = _schema_file(df.sparkSession, path, fmt)
     if record is None:
         writer.save(path)
         return
     fs, at = record
+    dynamic = bool(partition_by) and options.get(
+        "partitionOverwriteMode",
+        df.sparkSession.conf.get(
+            "spark.sql.sources.partitionOverwriteMode", "static"
+        ),
+    ).lower() == "dynamic"
+    fs.delete(at, False)
+    writer.save(path)
+    if mode.lower() != "overwrite" or dynamic:
+        return
     parts = {c.lower() for c in partition_by or ()}
     schema = _nullable(
         T.StructType([f for f in df.schema if f.name.lower() not in parts])
     ).json()
-    keep = whole or _recorded_schema(fs, at) == schema
-    fs.delete(at, False)
-    writer.save(path)
-    if keep:
-        out = fs.create(at, True)
-        try:
-            out.write(bytearray(schema.encode()))
-        finally:
-            out.close()
+    out = fs.create(at, True)
+    try:
+        out.write(bytearray(schema.encode()))
+    finally:
+        out.close()
 
 
 def compact_tier(
@@ -418,10 +424,7 @@ def compact_tier(
     else:
         out = df.repartition(n_target)
     staging = path.rstrip("/") + ".__compacting__"
-    writer = out.write.format(fmt).mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    _save(writer, out, staging, fmt, partition_by)
+    _save(out, staging, fmt, partition_by=partition_by)
     fs.delete(jpath(path), True)
     fs.rename(jpath(staging), jpath(path))
     return {
@@ -514,10 +517,7 @@ def optimize_table(
         .sortWithinPartitions(key)
         .drop(key)
     )
-    _save(
-        clustered.write.format(fmt).mode("overwrite"), clustered,
-        path + "__clustered", fmt,
-    )
+    _save(clustered, path + "__clustered", fmt)
     return "parquet-morton-cluster"
 
 

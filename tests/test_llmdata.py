@@ -99,25 +99,6 @@ def test_wordlevel_minhash_recall_vs_exact(spark, sf_small):
     assert recall >= 0.95, f"word-level MinHash recall {recall}"
 
 
-def test_banded_pairs_same_for_any_salt_count(spark, planted_docs):
-    """The salt only splits the (lang, band) blocks across join keys:
-    one salt and sixteen give the same pairs, planted ones included."""
-    df, near_pairs = planted_docs
-    docs = df.withColumn("lang", F.lit("en"))
-
-    def pairs(n_salts: int) -> set:
-        return {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup_ops.banded_word_jaccard_pairs(
-                docs, n_salts=n_salts
-            ).collect()
-        }
-
-    one = pairs(1)
-    assert one == pairs(16)
-    assert {(0, 200), (1, 201), *near_pairs} <= {(a, b) for a, b, _ in one}
-
-
 def test_simhash_planted_pairs(spark, planted_docs):
     df, near_pairs = planted_docs
     out = dedup_ops.simhash_pairs(df, "doc_id", "text", max_hamming=6)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import json
 import os
 import uuid
 
@@ -78,7 +79,11 @@ def typed(spark):
 def test_recorded_read_equals_inference(spark, typed, tmp_path, parts):
     path = str(tmp_path / "tier")
     med.materialize(typed, path, partition_by=parts)
-    assert os.path.exists(_record(path))
+    # the record is the footer's data schema: partition columns left
+    # out, every field, element and value nullable
+    with open(_record(path)) as f:
+        recorded = T.StructType.fromJson(json.load(f))
+    assert recorded == spark.read.parquet(path).drop(*(parts or [])).schema
     _reads_as_inference(spark, path)
 
 
@@ -114,19 +119,12 @@ def test_rewrites_record_what_they_wrote(spark, typed, tmp_path):
     _reads_as_inference(spark, morton + "__clustered")
 
 
-def test_append_keeps_record_only_for_the_same_schema(spark, typed, tmp_path):
+def test_append_drops_the_record(spark, typed, tmp_path):
+    """An append may change the tier's schema, so it leaves no record
+    and the tier reads as inference does (which footer inference takes
+    the schema from is Spark's choice)."""
     path = str(tmp_path / "tier")
     med.materialize(typed, path, partition_by=["digits"])
-    med.materialize(typed, path, mode="append", partition_by=["digits"])
-    # the same types read back from parquet are all nullable: the
-    # same data schema as far as the files are concerned
-    src = str(tmp_path / "src")
-    typed.write.parquet(src)
-    med.materialize(
-        spark.read.parquet(src), path, mode="append", partition_by=["digits"]
-    )
-    _, n = _jobs(spark, lambda: med.read_tier(spark, path))
-    assert n == 0
     med.materialize(
         typed.withColumn("extra", F.lit(1)), path, mode="append",
         partition_by=["digits"],
@@ -135,23 +133,18 @@ def test_append_keeps_record_only_for_the_same_schema(spark, typed, tmp_path):
     _reads_as_inference(spark, path)
 
 
-def test_dynamic_partition_overwrite_keeps_record_only_for_the_same_schema(
-    spark, typed, tmp_path
-):
+def test_dynamic_partition_overwrite_drops_the_record(spark, typed, tmp_path):
+    """A dynamic partition overwrite replaces only some partitions, so
+    it leaves no record; the kept partitions still read."""
     path = str(tmp_path / "tier")
     med.materialize(typed, path, partition_by=["digits"])
-    one = typed.filter("digits = '1'")
     med.materialize(
-        one, path, partition_by=["digits"], dynamic_partition_overwrite=True
-    )
-    assert os.path.exists(_record(path))
-    assert med.read_tier(spark, path).count() == 6
-    med.materialize(
-        one.drop("nul"), path, partition_by=["digits"],
-        dynamic_partition_overwrite=True,
+        typed.filter("digits = '1'").drop("nul"), path,
+        partition_by=["digits"], dynamic_partition_overwrite=True,
     )
     assert not os.path.exists(_record(path))
     _reads_as_inference(spark, path)
+    assert med.read_tier(spark, path).count() == 6
 
 
 def test_foreign_overwrite_replaces_the_record(spark, typed, tmp_path):
