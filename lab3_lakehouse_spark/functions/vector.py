@@ -40,16 +40,6 @@ def l2_norm(a: Column | str) -> Column:
     )
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_dbl(a), _dbl(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 

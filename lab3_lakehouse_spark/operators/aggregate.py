@@ -90,19 +90,6 @@ def distinct_rows(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame
     return (df.select(*cols) if cols else df).distinct()
 
 
-def exact_distinct_count(df: DataFrame, col: str, alias: str = "n_distinct") -> DataFrame:
-    return df.agg(F.countDistinct(F.col(col)).alias(alias))
-
-
-def approx_distinct_count(
-    df: DataFrame, col: str, rsd: float = 0.02, alias: str = "n_distinct_approx"
-) -> DataFrame:
-    """HyperLogLog++ distinct — constant memory per group, the 100 TB
-    default when exactness isn't required (exact countDistinct expands
-    the aggregate into a per-key dedup shuffle)."""
-    return df.agg(F.approx_count_distinct(F.col(col), rsd).alias(alias))
-
-
 def salted_agg(
     df: DataFrame,
     keys: Sequence[str],

@@ -7,12 +7,14 @@ Five tiers, cheapest first:
 - ``exact_dedup``            — deterministic keep-first-by-tiebreak on a
                                content key (hash-groupBy; one shuffle).
 - ``fingerprint``            — md5 content fingerprint column.
-- ``word_jaccard_pairs``     — blocked all-pairs word-set Jaccard
-                               (exact, for modest block sizes).
-- ``minhash_lsh_candidates`` + ``minhash_verify`` — MinHash + banded LSH:
-                               the 100 TB near-dup path (shuffle on band
-                               keys only, candidates ≪ n²).
-- ``simhash``                + ``simhash_pairs`` — 64-bit SimHash with
+- ``banded_word_jaccard_pairs`` — lang- and length-blocked exact
+                               word-set Jaccard (threshold 0.8 only).
+- ``shingle_hashes`` → ``minhash_lsh_candidates_from_hashes`` →
+  ``minhash_verify_hashed`` — MinHash + banded LSH over shingle hashes
+                               computed once per document: the 100 TB
+                               near-dup path (shuffle on band keys only,
+                               candidates ≪ n²).
+- ``simhash64``              + ``simhash_pairs`` — 64-bit SimHash with
                                chunk-banded Hamming candidate generation.
 
 All hashing is JVM-side Catalyst expressions (``xxhash64``, higher-order
@@ -148,42 +150,6 @@ def minhash_from_hashes(hashes: Column, num_perm: int = 64, seed: int = 42) -> C
     )
 
 
-def minhash_signature(
-    text: Column | str, num_perm: int = 64, shingle_n: int = 3, seed: int = 42
-) -> Column:
-    """MinHash signature (array<long> of length num_perm) over word
-    shingles — convenience form; prefer shingle_hashes + withColumn +
-    minhash_from_hashes in pipelines (see minhash_lsh_candidates)."""
-    return minhash_from_hashes(shingle_hashes(text, shingle_n), num_perm, seed)
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash-LSH.
-
-    rows × bands exploded rows, shuffled once on (band, band_hash);
-    pairs are generated only within buckets. With r = num_perm/bands
-    rows per band, the usual S-curve applies (collision prob ≈
-    1-(1-s^r)^b for Jaccard s). Returns distinct (id_a, id_b), id_a<id_b.
-
-    Scale: never materializes n² — bucket sizes bound the join fan-out;
-    a pathological bucket (giant cluster of identical docs) is handled
-    upstream by exact_dedup first.
-    """
-    hashed = df.select(
-        F.col(id_col).alias("__id"),
-        shingle_hashes(text_col, shingle_n).alias("__h"),
-    )
-    return minhash_lsh_candidates_from_hashes(hashed, num_perm, bands, seed)
-
-
 def minhash_lsh_candidates_from_hashes(
     hashed: DataFrame,
     num_perm: int = 64,
@@ -191,13 +157,19 @@ def minhash_lsh_candidates_from_hashes(
     seed: int = 42,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Banded-LSH candidates from a precomputed ``(__id, __h)`` frame
-    (``__h`` = distinct shingle hashes, array<long>) — split out so
-    callers that also need the shingle hashes for verification (e.g.
-    ``minhash_verify_hashed``) tokenize + hash each document ONCE and
-    share the frame via ``localCheckpoint`` (same pattern as
-    ``simhash_pairs_from_sims``). At 100 TB the double tokenize pass
-    this avoids is a full extra corpus scan.
+    """Candidate near-duplicate pairs via banded MinHash-LSH over a
+    precomputed ``(__id, __h)`` frame (``__h`` = distinct shingle
+    hashes from :func:`shingle_hashes`, array<long>). Returns distinct
+    ``(id_a, id_b)`` with ``id_a < id_b``.
+
+    rows × bands exploded rows, shuffled once on (band, band_hash);
+    pairs are generated only within buckets. With r = num_perm/bands
+    rows per band, the usual S-curve applies (collision prob ≈
+    1-(1-s^r)^b for Jaccard s). Verify the candidates with
+    :func:`minhash_verify_hashed` against the SAME frame, so each
+    document is tokenized and hashed ONCE and verification measures
+    the shingle width the banding approximated; share the frame via
+    ``localCheckpoint`` (same pattern as ``simhash_pairs_from_sims``).
 
     ``max_bucket`` is the hot-bucket guard: a band bucket with n
     members emits n(n-1)/2 pairs, so ONE pathological bucket (mass-
@@ -425,12 +397,15 @@ def minhash_store_params(spark, store_root: str) -> tuple[int, int, int] | None:
     (pre-r14 stores — validation is skipped for them, the documented
     migration-free path). A store whose appends disagree on parameters
     is corrupt (its bands tier mixes incompatible bucketings) and
-    raises. Driver cost is bounded: the distinct of a 3-int sidecar."""
-    import os
-
+    raises. Driver cost is bounded: the distinct of a 3-int sidecar.
+    Probed through the Hadoop FileSystem, so a URI store root (file://,
+    s3a://, hdfs://) is validated like a local path, not skipped."""
     from lab3_lakehouse_spark import stores
+    from lab3_lakehouse_spark.sources.versioned import _fs
 
-    if not os.path.exists(stores.tier_path(store_root, "params")):
+    params_path = stores.tier_path(store_root, "params")
+    fs, jpath = _fs(spark, params_path)
+    if not fs.exists(jpath(params_path)):
         return None
     rows = (
         stores.read_tier(spark, store_root, "params").distinct().collect()
@@ -550,48 +525,6 @@ def jaccard_arrays(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = (F.size(a) + F.size(b)).cast("double") - inter
     return inter / union
-
-
-def word_jaccard(text_a: Column, text_b: Column) -> Column:
-    """Exact word-set Jaccard similarity between two text columns."""
-    return jaccard_arrays(
-        F.array_distinct(tokens(text_a)), F.array_distinct(tokens(text_b))
-    )
-
-
-def shingle_jaccard(text_a: Column, text_b: Column, n: int = 3) -> Column:
-    """Exact n-word-shingle Jaccard — the measure banded MinHash-LSH
-    approximates; n=1 degenerates to word-set Jaccard."""
-    return jaccard_arrays(word_shingles(text_a, n), word_shingles(text_b, n))
-
-
-def minhash_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.7,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Exact-Jaccard verification of LSH candidates (joins text back in;
-    candidates ≪ n² so this is cheap).
-
-    ``shingle_n`` MUST match the value used in
-    ``minhash_lsh_candidates`` — verification has to measure the same
-    similarity the LSH banding approximates, or the precision/recall
-    analysis is incoherent (shingle-Jaccard ≠ word-set-Jaccard for
-    order-shuffled text).
-    """
-    a = docs.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta"))
-    b = docs.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb"))
-    out = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", shingle_jaccard(F.col("__ta"), F.col("__tb"), shingle_n))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out
 
 
 def minhash_verify_hashed(

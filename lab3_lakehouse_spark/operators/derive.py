@@ -67,8 +67,3 @@ def duration_minutes(start_ts: str | Column, end_ts: str | Column) -> Column:
     s = F.col(start_ts) if isinstance(start_ts, str) else start_ts
     e = F.col(end_ts) if isinstance(end_ts, str) else end_ts
     return (e.cast("long") - s.cast("long")) / F.lit(60.0)
-
-
-def with_derived(df: DataFrame, derived: dict[str, Column]) -> DataFrame:
-    """Attach a batch of derived metric columns (P4 generalized)."""
-    return df.withColumns(derived)

@@ -30,10 +30,6 @@ from pyspark.sql import types as T
 from lab3_lakehouse_spark.functions.vector import cosine_similarity, dot
 
 
-def _lit_vec(v: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v])
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -175,13 +175,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def marker_score(text: Column | str, markers: tuple[str, ...]) -> Column:
-    """Total occurrences of marker words among whitespace tokens."""
-    toks = whitespace_tokens(F.lower(F.col(text) if isinstance(text, str) else text))
-    m = F.array(*[F.lit(x) for x in markers])
-    return F.size(F.filter(toks, lambda w: F.array_contains(m, w)))
-
-
 def winnowed_fingerprints(text: Column | str, k: int = 5, w: int = 4) -> Column:
     """Document fingerprints via winnowing (Schleimer et al., MOSS):
     xxhash64 each k-word shingle, then keep the minimum hash of every

@@ -56,20 +56,6 @@ def ranked(
     return df.withColumn(alias, fns[method]().over(_spec(partition_by, order_by)))
 
 
-def running_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    agg_col: str,
-    agg: str = "sum",
-    alias: str = "running",
-) -> DataFrame:
-    """Running aggregate over rows from partition start to current row."""
-    fns = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max, "count": F.count}
-    spec = _spec(partition_by, order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(alias, fns[agg](F.col(agg_col)).over(spec))
-
-
 def lag_lead(
     df: DataFrame,
     partition_by: Sequence[str],

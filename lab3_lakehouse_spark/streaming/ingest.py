@@ -45,13 +45,12 @@ engines in sync by hand; here the stream IS the batch operator chain).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lab3_lakehouse_spark.operators import dedup as dedup_ops
+from lab3_lakehouse_spark.sources.versioned import _fs
 
 #: Arriving-document schema for the file stream (one JSON doc per line).
 DOC_STREAM_SCHEMA = T.StructType(
@@ -73,8 +72,11 @@ def _hashed(docs: DataFrame) -> DataFrame:
 def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Bootstrap-safe tier read: before the first batch lands, the
     corpus/store paths don't exist yet — an empty frame with the right
-    schema keeps every join in the batch body uniform."""
-    if os.path.isdir(path):
+    schema keeps every join in the batch body uniform. Probed through
+    the Hadoop FileSystem, so a URI root (file://, s3a://, hdfs://)
+    reads its existing tiers instead of silently reading them empty."""
+    fs, jpath = _fs(spark, path)
+    if fs.exists(jpath(path)):
         return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
 
@@ -432,7 +434,6 @@ def stream_ivfpq_append(
     the started StreamingQuery."""
     from lab3_lakehouse_spark import stores
     from lab3_lakehouse_spark.operators import similarity as sim_ops
-    from lab3_lakehouse_spark.sources.versioned import _fs
 
     checkpoint = f"{store_root}/_checkpoint"
     # the quantizer metadata is FROZEN during ingestion by contract

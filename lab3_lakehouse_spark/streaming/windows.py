@@ -136,26 +136,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window counts: each event lands in window/slide buckets."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
 def session_windows(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:

@@ -4,10 +4,17 @@ queries at sf0.1, each with a one-line reading of why the plan is the
 one you'd want at 100 TB. Run after any operator change:
 
     python scripts/dump_plans.py
+
+Before/after evidence for an optimization: dump the named frames into
+``<out>/<name>_<suffix>.txt``, once at the pre-change commit and once
+at the changed tree:
+
+    python scripts/dump_plans.py --names a,b --out plans/r15 --suffix before
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -460,8 +467,6 @@ def _bm25_store_probe_frame(spark):
     RDD scan. Rebuild the store and return the UNcheckpointed probe so
     PLANS.md shows the real index-probe shape (the In(term) pushdown,
     the sidecar aggregate, the bounded top-k window)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from lab3_lakehouse_spark.catalog import fan_out, load_table
@@ -488,8 +493,6 @@ def _ivfpq_store_probe_frame(spark):
     rebuild the index tiers and return the UNcheckpointed probe so
     PLANS.md shows the In(__cell) pushdown, the skinny ADC exchange and
     the broadcast re-rank fetch."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from lab3_lakehouse_spark.catalog import load_table
@@ -512,8 +515,6 @@ def _ivfpq_store_probe_frame(spark):
 def _phash_store_probe_frame(spark):
     """Rebuild the signature tier and return the UNcheckpointed probe +
     partner rollup, so PLANS.md shows a decode-free plan."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from lab3_lakehouse_spark.catalog import load_table
@@ -537,8 +538,6 @@ def _rerank_store_frame(spark):
     store probe (In(__cell) pushdown) → broadcast text fetch onto the
     bounded candidate frame → Arrow-batched pandas-UDF rerank window —
     the full first-stage-index + second-stage-scorer plan."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from lab3_lakehouse_spark.catalog import load_table
@@ -574,17 +573,56 @@ def _rerank_store_frame(spark):
     return text_ops.crossencoder_rerank(pairs, tie_cols=("ann_rank",))
 
 
+def _medallion_bronze_frame(spark):
+    """The bronze tier is a write, so plan its pre-write layout frame
+    (``sources.medallion._layout``: the AQE REBALANCE on the partition
+    columns) over the events table."""
+    from lab3_lakehouse_spark.catalog import load_table
+    from lab3_lakehouse_spark.sources import ingest
+    from lab3_lakehouse_spark.sources import medallion as med
+
+    ev = load_table(spark, SF_DIR, "events")
+    bronze = ingest.add_date_parts(ev, "ts", ("year", "month"))
+    return med._layout(bronze, ["year", "month"], None, None)
+
+
 #: plan built by a custom callable instead of QUERIES[name] (when the
-#: catalog body checkpoints away the interesting plan).
+#: catalog body checkpoints away the interesting plan, or is a write).
 CUSTOM_FRAME = {
     "bm25_postings_topk": _bm25_store_probe_frame,
     "ann_store_ivfpq_topk": _ivfpq_store_probe_frame,
     "media_phash_store_partners": _phash_store_probe_frame,
     "rerank_store_candidates": _rerank_store_frame,
+    "medallion_bronze": _medallion_bronze_frame,
 }
 
 
-def main() -> None:
+def _plan(spark, name: str) -> str:
+    """Formatted physical plan of ``name``, with the volatile codegen
+    ids and file paths normalized so reruns diff cleanly."""
+    if name in CUSTOM_FRAME:
+        frame = CUSTOM_FRAME[name](spark)
+    else:
+        frame = QUERIES[name](spark, SF_DIR)
+    plan = formatted_plan(frame)
+    plan = re.sub(r"\[codegen id : \d+\]", "[codegen]", plan)
+    plan = re.sub(r"file:[^\s,\]]+", "<path>", plan)
+    return plan.rstrip()
+
+
+def dump_named(names: list[str], out_dir: str, suffix: str) -> None:
+    """Write each named frame's plan to ``<out_dir>/<name>_<suffix>.txt``."""
+    os.makedirs(out_dir, exist_ok=True)
+    spark = build_session(app_name=f"dump-plans-{suffix}")
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(_plan(spark, name) + "\n")
+        print(f"wrote {path}")
+    spark.stop()
+
+
+def write_plans_md() -> None:
     spark = build_session(app_name="dump-plans")
     out = [
         "# PLANS — formatted physical plans for the flagship queries",
@@ -596,26 +634,35 @@ def main() -> None:
         "",
     ]
     for name, why in SHOWCASE.items():
-        if name in CUSTOM_FRAME:
-            frame = CUSTOM_FRAME[name](spark)
-        else:
-            frame = QUERIES[name](spark, SF_DIR)
-        plan = formatted_plan(frame)
-        # strip the volatile codegen/stage ids so reruns diff cleanly
-        plan = re.sub(r"\[codegen id : \d+\]", "[codegen]", plan)
-        plan = re.sub(r"file:[^\s,\]]+", "<path>", plan)
         out.append(f"## {name}")
         out.append("")
         out.append(why)
         out.append("")
         out.append("```")
-        out.append(plan.rstrip())
+        out.append(_plan(spark, name))
         out.append("```")
         out.append("")
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
     spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Regenerate PLANS.md, or with --names dump the named "
+        "frames' plans into <out>/<name>_<suffix>.txt."
+    )
+    ap.add_argument("--names", help="comma-separated query/frame names")
+    ap.add_argument("--out", help="output directory, e.g. plans/r15")
+    ap.add_argument("--suffix", choices=("before", "after"))
+    args = ap.parse_args()
+    if args.names is None:
+        write_plans_md()
+        return
+    if not (args.out and args.suffix):
+        ap.error("--names needs --out and --suffix")
+    dump_named(args.names.split(","), args.out, args.suffix)
 
 
 if __name__ == "__main__":

@@ -54,8 +54,11 @@ def test_exact_dedup_keeps_smallest_id(spark, planted_docs):
 
 def test_minhash_lsh_finds_planted_near_dups(spark, planted_docs):
     df, near_pairs = planted_docs
-    cands = dedup_ops.minhash_lsh_candidates(df, "doc_id", "text", num_perm=64, bands=16)
-    verified = dedup_ops.minhash_verify(cands, df, "doc_id", "text", threshold=0.7)
+    hashed = df.select(
+        F.col("doc_id").alias("__id"), dedup_ops.shingle_hashes("text", 3).alias("__h")
+    )
+    cands = dedup_ops.minhash_lsh_candidates_from_hashes(hashed, num_perm=64, bands=16)
+    verified = dedup_ops.minhash_verify_hashed(cands, hashed, threshold=0.7)
     found = {(r.id_a, r.id_b) for r in verified.collect()}
     for pair in near_pairs:
         assert pair in found, f"missed planted near-dup {pair}"
@@ -65,8 +68,11 @@ def test_minhash_lsh_finds_planted_near_dups(spark, planted_docs):
 
 def test_minhash_no_false_positives_after_verify(spark, planted_docs):
     df, near_pairs = planted_docs
-    cands = dedup_ops.minhash_lsh_candidates(df, "doc_id", "text")
-    verified = dedup_ops.minhash_verify(cands, df, "doc_id", "text", threshold=0.7)
+    hashed = df.select(
+        F.col("doc_id").alias("__id"), dedup_ops.shingle_hashes("text", 3).alias("__h")
+    )
+    cands = dedup_ops.minhash_lsh_candidates_from_hashes(hashed)
+    verified = dedup_ops.minhash_verify_hashed(cands, hashed, threshold=0.7)
     expected = set(near_pairs) | {(0, 200), (1, 201)}
     found = {(r.id_a, r.id_b) for r in verified.collect()}
     # verification stage guarantees precision: every surviving pair is
@@ -78,19 +84,20 @@ def test_minhash_no_false_positives_after_verify(spark, planted_docs):
 
 
 def test_wordlevel_minhash_recall_vs_exact(spark, sf_small):
-    """shingle_n=1 MinHash-LSH approximates word-set Jaccard: recall vs
-    the exact same-lang blocked pairs at threshold 0.8 must be high
-    (S-curve: J=0.8, r=4, b=16 → collision prob ≈ 0.9998)."""
+    """MinHash-LSH over 1-shingle hashes approximates word-set Jaccard:
+    recall vs the exact same-lang blocked pairs at threshold 0.8 must
+    be high (S-curve: J=0.8, r=4, b=16 → collision prob ≈ 0.9998).
+    Candidates and verification share one hash frame, so each doc is
+    tokenized once rather than once per candidate pair."""
     from lab3_lakehouse_spark.catalog import load_table
     from lab3_lakehouse_spark.queries import QUERIES
 
     docs = load_table(spark, sf_small, "documents")
-    cands = dedup_ops.minhash_lsh_candidates(
-        docs, "doc_id", "text", num_perm=64, bands=16, shingle_n=1
-    )
-    found = dedup_ops.minhash_verify(
-        cands, docs, "doc_id", "text", threshold=0.8, shingle_n=1
-    )
+    hashed = docs.select(
+        F.col("doc_id").alias("__id"), dedup_ops.shingle_hashes("text", 1).alias("__h")
+    ).localCheckpoint(eager=False)
+    cands = dedup_ops.minhash_lsh_candidates_from_hashes(hashed, num_perm=64, bands=16)
+    found = dedup_ops.minhash_verify_hashed(cands, hashed, threshold=0.8)
     lsh_pairs = {(r.id_a, r.id_b) for r in found.collect()}
     exact = QUERIES["word_jaccard_near_dups"](spark, sf_small).collect()
     exact_pairs = {(r.id_a, r.id_b) for r in exact}

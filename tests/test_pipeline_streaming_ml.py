@@ -731,19 +731,22 @@ def test_avro_paths_are_env_gated(spark, tmpdir):
             ingest.write_avro(spark.range(1), f"{tmpdir}/av")
 
 
-def test_streaming_ingest_dedups_against_persisted_store(spark, tmpdir):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_streaming_ingest_dedups_against_persisted_store(spark, tmpdir, scheme):
     """Continuous ingestion (streaming/ingest.py): files arrive one
     micro-batch at a time; exact copies die on the corpus fingerprint
     gate and near-dups die on the persisted LSH store probe — whichever
     order the files land in, exactly one representative of each content
-    cluster survives."""
+    cluster survives. A file:// URI root must give the plain-path
+    answer: the tier probes go through the Hadoop FileSystem, not
+    os.path, which would read every persisted tier as empty."""
     import json as _json
     import os
 
     from lab3_lakehouse_spark.streaming import ingest as st_ingest
 
     src = f"{tmpdir}/arrivals"
-    out = f"{tmpdir}/ingested"
+    out = f"{scheme}{tmpdir}/ingested"
     os.makedirs(src)
 
     base = "spark shuffle broadcast join window aggregate scan filter " \

@@ -693,7 +693,8 @@ def test_minhash_rebalance_equals_direct_and_preserves_candidates(
     assert old_cands <= new_cands  # monotone recall on band doubling
 
 
-def test_minhash_params_sidecar_guards_maintenance(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_minhash_params_sidecar_guards_maintenance(spark, tmp_path, scheme):
     """The params sidecar (r14, from r13 advice): every append records
     (num_perm, bands, seed); maintenance validates them BEFORE
     rewriting anything, because a mismatched rebalance would produce a
@@ -702,7 +703,8 @@ def test_minhash_params_sidecar_guards_maintenance(spark, tmp_path):
     the wrong seed / wrong num_perm / a non-multiple band count raises
     ValueError and leaves the destination root unwritten; (c) a valid
     rebalance stamps the NEW banding into the destination's params
-    tier; (d) compaction refuses a mixed-parameter store."""
+    tier; (d) compaction refuses a mixed-parameter store. A file:// URI
+    root must validate exactly like a plain path, not skip validation."""
     import os
 
     docs = _docs(spark, n=40)
@@ -710,7 +712,7 @@ def test_minhash_params_sidecar_guards_maintenance(spark, tmp_path):
         F.col("doc_id").alias("__id"),
         dedup_ops.shingle_hashes("text", 3).alias("__h"),
     ).localCheckpoint(eager=True)
-    src = str(tmp_path / "mh_params_src")
+    src = f"{scheme}{tmp_path}/mh_params_src"
     dedup_ops.minhash_store_append(src, hashed.filter(F.col("__id") < 20))
     dedup_ops.minhash_store_append(src, hashed.filter(F.col("__id") >= 20))
     dedup_ops.minhash_store_append(  # at-least-once replay
@@ -723,12 +725,13 @@ def test_minhash_params_sidecar_guards_maintenance(spark, tmp_path):
         dict(num_perm=128),    # wrong signature width
         dict(bands=24),        # 24 % 16 != 0: superset guarantee gone
     ):
-        dst = str(tmp_path / f"mh_params_bad_{sorted(bad)[0]}_{list(bad.values())[0]}")
+        dst = f"{scheme}{tmp_path}/mh_params_bad_{sorted(bad)[0]}_{list(bad.values())[0]}"
         with pytest.raises(ValueError):
             dedup_ops.rebalance_signature_store(spark, src, dst, **bad)
-        assert not os.path.exists(dst)  # validation ran before any write
+        # validation ran before any write
+        assert not os.path.exists(dst.removeprefix(scheme))
 
-    dst_ok = str(tmp_path / "mh_params_ok")
+    dst_ok = f"{scheme}{tmp_path}/mh_params_ok"
     dedup_ops.rebalance_signature_store(spark, src, dst_ok, bands=32)
     assert dedup_ops.minhash_store_params(spark, dst_ok) == (64, 32, 42)
 
@@ -739,7 +742,7 @@ def test_minhash_params_sidecar_guards_maintenance(spark, tmp_path):
         dedup_ops.minhash_store_params(spark, src)
     with pytest.raises(ValueError):
         dedup_ops.compact_signature_store(
-            spark, src, str(tmp_path / "mh_params_gc")
+            spark, src, f"{scheme}{tmp_path}/mh_params_gc"
         )
 
 
