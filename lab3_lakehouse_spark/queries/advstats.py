@@ -25,8 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lab3_lakehouse_spark.catalog import fan_out, load_table
+from lab3_lakehouse_spark.operators import dedup as dedup_ops
 from lab3_lakehouse_spark.queries._util import round4, sql_round4
-from lab3_lakehouse_spark.queries.registry import query
+from lab3_lakehouse_spark.queries.llmdata import lsh_near_dup_pairs
+from lab3_lakehouse_spark.queries.registry import body, query
 from lab3_lakehouse_spark.session import tune_session
 
 # ------------------------------------------------------------ skyline ----
@@ -1501,7 +1503,6 @@ def decontamination_bloom_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan with 3 broadcast joins and a doc-keyed agg — no
     corpus-sized shuffle. Hashes are the portable md5 family, so the
     oracle rebuilds the very same bits bit-for-bit."""
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
     from lab3_lakehouse_spark.operators import sketches
     from lab3_lakehouse_spark.queries._util import scratch_dir
 
@@ -1595,7 +1596,6 @@ def streaming_bloom_decontamination(
     scan + 3 broadcast joins at any stream age."""
     import shutil
 
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
     from lab3_lakehouse_spark.operators import sketches
     from lab3_lakehouse_spark.queries._util import scratch_dir
     from lab3_lakehouse_spark.streaming.ingest import stream_bloom_append
@@ -2503,11 +2503,23 @@ def dup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_groups_connected (recursive-closure oracle, exact cross-engine
     agreement on the graph op); the election adds one component-keyed
     window over the members frame — O(dup docs), not O(corpus)."""
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
-
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = _word_jaccard_pairs_adv(docs)
+    return _canonical_from_pairs(
+        docs, dedup_ops.banded_word_jaccard_pairs(docs)
+    )
+
+
+@body("dup_canonical_selection")
+def dup_canonical_selection_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the same election over the banded-LSH pair
+    source (:func:`queries.llmdata.lsh_near_dup_pairs`)."""
+    tune_session(spark)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return _canonical_from_pairs(docs, lsh_near_dup_pairs(docs))
+
+
+def _canonical_from_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     cc = dedup_ops.connected_components(pairs, "id_a", "id_b")
     members = cc.select(F.col("vertex").alias("doc_id"), "component").join(
         docs.select("doc_id", "n_chars"), "doc_id"
@@ -2540,33 +2552,8 @@ def dup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _word_jaccard_pairs_adv(docs: DataFrame, threshold: float = 0.8):
-    """Lang- AND length-banded exact word-Jaccard pair tier (the
-    SQL-replayable twin of the banded LSH source) — shared with
-    queries/llmdata._word_jaccard_pairs; re-declared here to keep the
-    module import-acyclic.
-
-    r13 (r12 verdict task #6): a LOSSLESS length-band blocking key
-    cuts the quadratic constant of the exact tier in BOTH engines.
-    Jaccard(A, B) ≥ 0.8 forces ``5·min(|A|,|B|) ≥ 4·max(|A|,|B|)``
-    (|A∩B| ≤ min, |A∪B| ≥ max), so with integer bands
-    ``b(n) = bitlength(n)`` a qualifying pair's bands differ by at
-    most 1 (the larger side is < 2× the smaller). The SMALLER side
-    (ties broken by doc_id) probes ``{b, b+1}``, the equi-join key
-    becomes ``(lang, band)`` instead of ``(lang)``, and the exact
-    integer size-ratio check runs as a join condition BEFORE the
-    expensive ``array_intersect`` — pairs of incompatible lengths
-    never reach it. The integer filter is provably lossless for the
-    fixed 4/5 threshold (a correctly-rounded double Jaccard ≥ 0.8
-    implies the exact rational na/nb ≥ 4/5 for any realistic set
-    size), so the output is bit-identical to the unbanded tier; the
-    oracle SQL applies the SAME banding (``_BANDED_PAIRS_CTES``)."""
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
-
-    return dedup_ops.banded_word_jaccard_pairs(docs, threshold)
-
-
-#: The oracle-side twin of :func:`_word_jaccard_pairs_adv`'s banding —
+#: The oracle-side twin of
+#: :func:`operators.dedup.banded_word_jaccard_pairs`'s banding —
 #: same (lang, band) equi-join, same {b, b+1} probe from the smaller
 #: side, same integer 5·min ≥ 4·max guard before the intersect, so the
 #: DuckDB leg's quadratic constant drops identically (output unchanged:
@@ -2649,12 +2636,27 @@ def leakage_safe_split_assignment(
     hashing); at scale the pair source swaps to the banded LSH tier
     exactly as in dup_canonical_selection. Output is the per-doc
     assignment table a data loader joins on."""
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
-    from lab3_lakehouse_spark.operators.sketches import portable_hash60
-
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = _word_jaccard_pairs_adv(docs)
+    return _leakage_split_from_pairs(
+        docs, dedup_ops.banded_word_jaccard_pairs(docs)
+    )
+
+
+@body("leakage_safe_split_assignment")
+def leakage_safe_split_assignment_lsh(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Production body: the same split over the banded-LSH pair source
+    (:func:`queries.llmdata.lsh_near_dup_pairs`)."""
+    tune_session(spark)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return _leakage_split_from_pairs(docs, lsh_near_dup_pairs(docs))
+
+
+def _leakage_split_from_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    from lab3_lakehouse_spark.operators.sketches import portable_hash60
+
     cc = dedup_ops.connected_components(pairs, "id_a", "id_b").select(
         F.col("vertex").alias("doc_id"), "component"
     )
@@ -2796,30 +2798,42 @@ def incremental_split_maintenance(
     without-storing contract carries over unchanged.
 
     Scale shape: the pair tier here is the exact word-Jaccard twin (so
-    the oracle can replay it); production swaps in the bipartite banded
-    LSH of incremental_near_dup_new_docs (bench override does exactly
-    that) — every stage is then batch-proportional: batch-vs-corpus
-    candidates from the persisted band store, one corpus-components
-    probe keyed on the matched doc ids, and a CC over a batch-sized
-    contracted graph. Cost ∝ the day's batch, never the corpus."""
+    the oracle can replay it); the production body
+    (:func:`incremental_split_maintenance_lsh`) feeds the same
+    downstream the whole-corpus self-join MinHash-LSH pairs of
+    minhash_lsh_near_dups instead. That pair source still costs ∝ the
+    corpus; the batch-proportional shape would take the bipartite
+    batch-vs-corpus candidates of incremental_near_dup_new_docs from
+    the persisted band store. The rest is already batch-sized: one
+    corpus-components probe keyed on the matched doc ids and a CC
+    over the contracted batch graph."""
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return _incremental_split_from_pairs(
-        docs, _word_jaccard_pairs_adv(docs).localCheckpoint(eager=False)
+        docs, dedup_ops.banded_word_jaccard_pairs(docs)
     )
+
+
+@body("incremental_split_maintenance")
+def incremental_split_maintenance_lsh(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Production body: the same upkeep over the banded-LSH pair source
+    (:func:`queries.llmdata.lsh_near_dup_pairs`)."""
+    tune_session(spark)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return _incremental_split_from_pairs(docs, lsh_near_dup_pairs(docs))
 
 
 def _incremental_split_from_pairs(
     docs: DataFrame, pairs: DataFrame
 ) -> DataFrame:
     """Everything downstream of the pair tier in
-    :func:`incremental_split_maintenance` — shared with the bench
-    override, which feeds the banded-LSH pair source instead of the
-    oracle-replayable exact tier (same swap as
-    leakage_safe_split_assignment's)."""
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
+    :func:`incremental_split_maintenance`; the entry feeds the
+    oracle-replayable exact tier, its body the banded-LSH pairs."""
     from lab3_lakehouse_spark.operators.sketches import portable_hash60
 
+    pairs = pairs.localCheckpoint(eager=False)
     is_new = F.col("doc_id") % 5 == 0
 
     # existing corpus components (the state a production run would READ
@@ -3146,8 +3160,6 @@ def jaro_winkler_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded pair frame through the Arrow UDF, a pushed filter on the
     score. At 100 TB the blocking keys are the whole ballgame
     (documented: add phonetic/sorted-neighborhood keys as blocks skew)."""
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
-
     tune_session(spark)
     part = fan_out(load_table(spark, sf_dir, "part"))
     p = part.select(
@@ -3449,7 +3461,6 @@ def streaming_split_assignment(
     import shutil
 
     from lab3_lakehouse_spark import stores
-    from lab3_lakehouse_spark.operators import dedup as dedup_ops
     from lab3_lakehouse_spark.queries._util import scratch_dir
     from lab3_lakehouse_spark.streaming import ingest as st_ingest
 

@@ -23,7 +23,7 @@ from lab3_lakehouse_spark.operators import similarity as sim_ops
 from lab3_lakehouse_spark.operators import text as text_ops
 from lab3_lakehouse_spark.operators.sketches import sql_hash60
 from lab3_lakehouse_spark.queries._util import round4, sql_round4
-from lab3_lakehouse_spark.queries.registry import query
+from lab3_lakehouse_spark.queries.registry import QueryFn, body, query
 from lab3_lakehouse_spark.session import tune_session
 
 
@@ -1540,10 +1540,31 @@ def dedup_discounted_token_budget(
     )
 
     tune_session(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    mapping = dup_canonical_selection(spark, sf_dir).select(
-        "doc_id", "is_canonical"
+    return _budget_from_canonical(spark, sf_dir, dup_canonical_selection)
+
+
+@body("dedup_discounted_token_budget")
+def dedup_discounted_token_budget_lsh(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Production body: the same allocation, canonicalized by
+    dup_canonical_selection's banded-LSH body."""
+    from lab3_lakehouse_spark.queries.advstats import (
+        dup_canonical_selection_lsh,
     )
+
+    tune_session(spark)
+    return _budget_from_canonical(spark, sf_dir, dup_canonical_selection_lsh)
+
+
+def _budget_from_canonical(
+    spark: SparkSession, sf_dir: str, canonical: QueryFn
+) -> DataFrame:
+    """The allocation over the docs that ``canonical``'s keep-one
+    mapping keeps: every doc outside a dup group, plus one canonical
+    per group."""
+    docs = load_table(spark, sf_dir, "documents")
+    mapping = canonical(spark, sf_dir).select("doc_id", "is_canonical")
     keep = (
         docs.join(mapping, "doc_id", "left")
         .filter(

@@ -32,7 +32,7 @@ from lab3_lakehouse_spark.operators import multimodal as mm_ops
 from lab3_lakehouse_spark.operators import similarity as sim_ops
 from lab3_lakehouse_spark.operators import text as text_ops
 from lab3_lakehouse_spark.queries._util import round4, sql_round4
-from lab3_lakehouse_spark.queries.registry import query
+from lab3_lakehouse_spark.queries.registry import body, query
 from lab3_lakehouse_spark.session import tune_session
 
 # ------------------------------------------------------------- dedup ----
@@ -92,21 +92,12 @@ def dedup_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def word_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-set Jaccard near-dup pairs, blocked by language —
     the blocked-all-pairs pattern (pairs only within blocks, never n²
-    across the corpus)."""
+    across the corpus). This is the oracle-replayable pair tier of the
+    whole dup family; its lossless length bands are documented at
+    :func:`operators.dedup.banded_word_jaccard_pairs`."""
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return _word_jaccard_pairs(docs)
-
-
-def _word_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """Lang- and length-banded exact word-Jaccard pairs ≥ threshold
-    (shared by the dup family). r13: delegates to
-    :func:`operators.dedup.banded_word_jaccard_pairs` — the LOSSLESS
-    length-band blocking key (bitlength of the distinct-word count;
-    qualifying pairs differ by ≤1 band) cuts the per-lang-block
-    quadratic constant without changing a single output row, so the
-    unbanded oracle SQL still matches bit-for-bit."""
-    return dedup_ops.banded_word_jaccard_pairs(docs, threshold)
+    return dedup_ops.banded_word_jaccard_pairs(docs)
 
 
 @query(
@@ -154,7 +145,19 @@ def dup_groups_connected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = _word_jaccard_pairs(docs)
+    return _dup_groups_from_pairs(dedup_ops.banded_word_jaccard_pairs(docs))
+
+
+@body("dup_groups_connected")
+def dup_groups_connected_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the same components over the banded-LSH pair
+    source (:func:`lsh_near_dup_pairs`)."""
+    tune_session(spark)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return _dup_groups_from_pairs(lsh_near_dup_pairs(docs))
+
+
+def _dup_groups_from_pairs(pairs: DataFrame) -> DataFrame:
     cc = dedup_ops.connected_components(pairs, "id_a", "id_b")
     return cc.select(
         F.col("vertex").alias("doc_id"),
@@ -198,7 +201,21 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped count to a ≤ sources² grid."""
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = _word_jaccard_pairs(docs)
+    return _cross_source_from_pairs(
+        docs, dedup_ops.banded_word_jaccard_pairs(docs)
+    )
+
+
+@body("cross_source_dup_matrix")
+def cross_source_dup_matrix_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the same matrix over the banded-LSH pair
+    source (:func:`lsh_near_dup_pairs`)."""
+    tune_session(spark)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return _cross_source_from_pairs(docs, lsh_near_dup_pairs(docs))
+
+
+def _cross_source_from_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     src = docs.select("doc_id", "source")
     j = (
         pairs.join(
@@ -280,7 +297,19 @@ def dup_group_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram is differential-checked end-to-end."""
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = _word_jaccard_pairs(docs)
+    return _dup_histogram_from_pairs(dedup_ops.banded_word_jaccard_pairs(docs))
+
+
+@body("dup_group_size_histogram")
+def dup_group_size_histogram_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the same histogram over the banded-LSH pair
+    source (:func:`lsh_near_dup_pairs`)."""
+    tune_session(spark)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return _dup_histogram_from_pairs(lsh_near_dup_pairs(docs))
+
+
+def _dup_histogram_from_pairs(pairs: DataFrame) -> DataFrame:
     cc = dedup_ops.connected_components(pairs, "id_a", "id_b")
     sizes = cc.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("group_size")
@@ -347,9 +376,23 @@ def dup_component_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame."""
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = _word_jaccard_pairs(docs).localCheckpoint(
-        eager=False
-    )  # feeds CC AND the per-component pair count
+    return _density_from_pairs(dedup_ops.banded_word_jaccard_pairs(docs))
+
+
+@body("dup_component_density_audit")
+def dup_component_density_audit_lsh(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Production body: the same audit over the banded-LSH pair source
+    (:func:`lsh_near_dup_pairs`)."""
+    tune_session(spark)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return _density_from_pairs(lsh_near_dup_pairs(docs))
+
+
+def _density_from_pairs(pairs: DataFrame) -> DataFrame:
+    # the pair frame feeds CC AND the per-component pair count
+    pairs = pairs.localCheckpoint(eager=False)
     cc = dedup_ops.connected_components(pairs, "id_a", "id_b")
     comp = cc.select(F.col("vertex").alias("doc_id"), "component")
     sizes = comp.groupBy("component").agg(
@@ -952,7 +995,14 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates in tests/test_llmdata.py.
     """
     tune_session(spark)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return lsh_near_dup_pairs(fan_out(load_table(spark, sf_dir, "documents")))
+
+
+def lsh_near_dup_pairs(docs: DataFrame) -> DataFrame:
+    """Verified 3-shingle MinHash-LSH pairs ``(id_a, id_b, jaccard)``
+    of ``docs`` — the at-scale pair source every dup-family body feeds
+    its downstream with (the contracts feed the exact word-Jaccard
+    tier instead, so the oracle can replay them)."""
     # Tokenize + shingle-hash each doc ONCE; candidates and verification
     # both read this frame (localCheckpoint pins it past both subtrees —
     # the simhash_near_dups pattern). Saves a full second text scan.
@@ -983,14 +1033,14 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc count (SQL-checkable) plus ``banding_complete`` — true iff the
     banded pair set EQUALS the exhaustive one, i.e. the pigeonhole
     banding loses nothing and adds nothing. The pair list itself stays
-    available via operators.dedup.simhash_pairs."""
+    available via the production body :func:`simhash_near_dup_pairs`."""
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
+    banded = simhash_near_dup_pairs(spark, sf_dir).select("id_a", "id_b")
+    # the brute-force leg signs the docs itself: it shares no frame
+    # with the body it checks
     base = docs.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t"))
     sims = dedup_ops.simhash64(base, "__id", "__t").localCheckpoint(eager=False)
-    banded = dedup_ops.simhash_pairs_from_sims(sims, max_hamming=3).select(
-        "id_a", "id_b"
-    )
     l, r = sims.alias("l"), sims.alias("r")
     brute = (
         l.join(r, F.col("l.__id") < F.col("r.__id"))
@@ -1011,6 +1061,15 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     return n.crossJoin(sym_diff_empty).select("n_docs", "banding_complete")
+
+
+@body("simhash_near_dups")
+def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the banded SimHash pairs ``(id_a, id_b,
+    hamming)`` the contract checks against the brute-force scan."""
+    tune_session(spark)
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup_ops.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
 
 
 # -------------------------------------------------------- similarity ----
@@ -1232,14 +1291,22 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-based scale path. Emits recall vs the exact brute-force top-k
     (floor 0.7; measured 0.90–0.925 at sf0.01/sf0.1 with 16 cells,
     n_probe=8 on this near-random corpus)."""
+    return _ann_recall_stats(
+        ann_topk_bruteforce(spark, sf_dir),
+        ann_ivf_neighbors(spark, sf_dir),
+        floor=0.7,
+    )
+
+
+@body("ann_ivf_topk")
+def ann_ivf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the IVF top-5 of the 8 query vectors."""
     tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8)
-    bf = sim_ops.brute_force_topk(emb, q, "vec_id", "embedding", k=5)
-    ivf = sim_ops.ivf_topk(
-        emb, q, "vec_id", "embedding", k=5, n_centroids=16, n_probe=8,
+    return sim_ops.ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 8), "vec_id", "embedding",
+        k=5, n_centroids=16, n_probe=8,
     )
-    return _ann_recall_stats(bf, ivf, floor=0.7)
 
 
 @query("ann_ivfpq_topk", oracle=_ANN_RECALL_ORACLE)
@@ -1254,15 +1321,22 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact brute-force top-k (floor 0.7 — bounded by the IVF routing's
     ~0.9 on this near-random corpus; the deep re-rank recovers
     everything the probed cells contain)."""
+    return _ann_recall_stats(
+        ann_topk_bruteforce(spark, sf_dir),
+        ann_ivfpq_neighbors(spark, sf_dir),
+        floor=0.7,
+    )
+
+
+@body("ann_ivfpq_topk")
+def ann_ivfpq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the IVF-PQ top-5 of the 8 query vectors."""
     tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8)
-    bf = sim_ops.brute_force_topk(emb, q, "vec_id", "embedding", k=5)
-    ivfpq = sim_ops.ivfpq_topk(
-        emb, q, "vec_id", "embedding",
+    return sim_ops.ivfpq_topk(
+        emb, emb.filter(F.col("vec_id") < 8), "vec_id", "embedding",
         k=5, n_centroids=16, n_probe=8, dim=64, m=8, n_codes=32, rerank=400,
     )
-    return _ann_recall_stats(bf, ivfpq, floor=0.7)
 
 
 _ANN_STORE_ORACLE = """
@@ -1813,23 +1887,12 @@ def doc_fingerprint_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is computed exactly by BOTH engines (Spark on shingle hashes,
     DuckDB on shingle strings) — a real cross-engine check, with the two
     containments asserted Spark-side. The raw fingerprint groups stay
-    available via operators.text.winnowed_fingerprints."""
+    available via the production body :func:`doc_fingerprint_groups`,
+    which shares this entry's token-hash frame and winnowing
+    (:func:`_winnowed_fingerprints`); the theorems need the per-doc
+    fingerprints, which its grouped output drops."""
     tune_session(spark)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # Tokenize + hash tokens ONCE; all three shingle widths (winnowed
-    # k=3, guarantee k=6, precision k=3) derive from this checkpointed
-    # token-hash frame instead of re-scanning + re-tokenizing text 3×.
-    base = docs.select(
-        "doc_id", dedup_ops.token_hashes("text").alias("__th")
-    ).localCheckpoint(eager=False)
-    fps = base.select(
-        "doc_id",
-        F.explode(
-            text_ops.winnowed_fingerprints_from_shingle_hashes(
-                dedup_ops.shingle_hashes_from_token_hashes(F.col("__th"), 3), w=4
-            )
-        ).alias("fp"),
-    )
+    base, fps = _winnowed_fingerprints(spark, sf_dir)
     a, b = fps.alias("a"), fps.alias("b")
     fp_pairs = (
         a.join(
@@ -1882,6 +1945,42 @@ def doc_fingerprint_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _winnowed_fingerprints(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The checkpointed ``(doc_id, __th)`` token-hash frame and the
+    ``(doc_id, fp)`` winnowed k=3, w=4 fingerprints derived from it.
+    Tokenize + hash tokens ONCE: every shingle width the contract
+    needs (winnowed k=3, guarantee k=6, precision k=3) derives from
+    the token hashes instead of re-scanning + re-tokenizing text."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    base = docs.select(
+        "doc_id", dedup_ops.token_hashes("text").alias("__th")
+    ).localCheckpoint(eager=False)
+    fps = base.select(
+        "doc_id",
+        F.explode(
+            text_ops.winnowed_fingerprints_from_shingle_hashes(
+                dedup_ops.shingle_hashes_from_token_hashes(F.col("__th"), 3), w=4
+            )
+        ).alias("fp"),
+    )
+    return base, fps
+
+
+@body("doc_fingerprint_matches")
+def doc_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: fingerprints shared by ≥ 2 docs, with their doc
+    count and smallest doc id — the copy-candidate groups."""
+    tune_session(spark)
+    _, fps = _winnowed_fingerprints(spark, sf_dir)
+    return (
+        fps.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("min_doc_id"))
+        .filter(F.col("n_docs") >= 2)
+    )
+
+
 @query("ann_pq_topk", oracle=_ANN_RECALL_ORACLE)
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011): each 64-float
@@ -1896,17 +1995,26 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force top-k (floor 0.8; measured 1.0 at sf0.01/sf0.1 —
     near-random embeddings need the deep re-rank, clustered real
     embeddings get away with far less)."""
+    return _ann_recall_stats(
+        ann_topk_bruteforce(spark, sf_dir),
+        ann_pq_neighbors(spark, sf_dir),
+        floor=0.8,
+    )
+
+
+@body("ann_pq_topk")
+def ann_pq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: codebook fit + encode, then the PQ top-5 of
+    the 8 query vectors."""
     tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8)
-    bf = sim_ops.brute_force_topk(emb, q, "vec_id", "embedding", k=5)
     coded, books = sim_ops.pq_build(
         emb, "vec_id", "embedding", dim=64, m=8, n_codes=32
     )
-    pq = sim_ops.pq_topk(
-        coded, books, q, "vec_id", "embedding", k=5, rerank=400
+    return sim_ops.pq_topk(
+        coded, books, emb.filter(F.col("vec_id") < 8),
+        "vec_id", "embedding", k=5, rerank=400,
     )
-    return _ann_recall_stats(bf, pq, floor=0.8)
 
 
 @query("ann_lsh_topk", oracle=_ANN_RECALL_ORACLE)
@@ -1917,14 +2025,23 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01/sf0.1 with 4-bit hashes × 32 tables — this corpus is
     near-random, so recall needs many short hashes; clustered real
     embeddings get away with longer hashes and fewer tables)."""
+    return _ann_recall_stats(
+        ann_topk_bruteforce(spark, sf_dir),
+        ann_lsh_neighbors(spark, sf_dir),
+        floor=0.8,
+    )
+
+
+@body("ann_lsh_topk")
+def ann_lsh_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the random-hyperplane LSH top-5 of the 8 query
+    vectors."""
     tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8)
-    bf = sim_ops.brute_force_topk(emb, q, "vec_id", "embedding", k=5)
-    lsh = sim_ops.rp_lsh_topk(
-        emb, q, "vec_id", "embedding", dim=64, k=5, n_bits=4, n_tables=32,
+    return sim_ops.rp_lsh_topk(
+        emb, emb.filter(F.col("vec_id") < 8), "vec_id", "embedding",
+        dim=64, k=5, n_bits=4, n_tables=32,
     )
-    return _ann_recall_stats(bf, lsh, floor=0.8)
 
 
 # ------------------------------------------------------ text analysis ----
@@ -3853,7 +3970,7 @@ def lsh_banding_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     hist = (
-        _word_jaccard_pairs(docs)
+        dedup_ops.banded_word_jaccard_pairs(docs)
         .select(
             F.least(
                 F.floor((F.col("jaccard") - F.lit(0.8)) / F.lit(0.05)),

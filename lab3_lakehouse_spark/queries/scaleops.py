@@ -25,7 +25,7 @@ from lab3_lakehouse_spark.operators import sampling as sampling_ops
 from lab3_lakehouse_spark.operators import sketches
 from lab3_lakehouse_spark.operators import similarity as sim_ops
 from lab3_lakehouse_spark.operators import text as text_ops
-from lab3_lakehouse_spark.queries.registry import query
+from lab3_lakehouse_spark.queries.registry import body, query
 from lab3_lakehouse_spark.queries._util import round4, sql_round4
 from lab3_lakehouse_spark.session import tune_session
 
@@ -2569,7 +2569,45 @@ def kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates are hash-checked cell-for-cell, and the exact distinct /
     intersection counts ride along so the artifact itself shows the
     estimate error. At 100 TB the exact columns are the expensive part
-    you'd drop; here they are the honesty columns."""
+    you'd drop (the production body :func:`kmv_overlap_estimates`
+    does); here they are the honesty columns."""
+    tune_session(spark)
+    ev = load_table(spark, sf_dir, "events")
+    du = ev.select(
+        F.col("event_type").alias("segment"), F.col("user_id").alias("u")
+    ).distinct().localCheckpoint(eager=False)
+    exact_n = du.groupBy("segment").agg(F.count(F.lit(1)).alias("n"))
+    da = du.select(F.col("segment").alias("seg_a"), "u")
+    db = du.select(F.col("segment").alias("seg_b"), "u")
+    exact_int = (
+        da.join(db, "u")
+        .filter(F.col("seg_a") < F.col("seg_b"))
+        .groupBy("seg_a", "seg_b")
+        .agg(F.count(F.lit(1)).alias("n_int"))
+    )
+    return (
+        kmv_overlap_estimates(spark, sf_dir)
+        .join(exact_n.withColumnRenamed("segment", "seg_a").withColumnRenamed("n", "exact_a"), "seg_a")
+        .join(exact_n.withColumnRenamed("segment", "seg_b").withColumnRenamed("n", "exact_b"), "seg_b")
+        .join(exact_int, ["seg_a", "seg_b"], "left")
+        .select(
+            "seg_a",
+            "seg_b",
+            "exact_a",
+            "exact_b",
+            F.coalesce(F.col("n_int"), F.lit(0)).alias("exact_int"),
+            "est_a",
+            "est_b",
+            "est_union",
+            "est_intersection",
+        )
+    )
+
+
+@body("kmv_audience_overlap")
+def kmv_overlap_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production body: the per-pair KMV estimates alone — sketch cells
+    and pair merges, none of the contract's exact counting."""
     from pyspark.sql import Window
 
     tune_session(spark)
@@ -2612,31 +2650,12 @@ def kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("in_a") * F.col("in_b")).alias("rho"),
     )
 
-    du = ev.select(
-        F.col("event_type").alias("segment"), F.col("user_id").alias("u")
-    ).distinct().localCheckpoint(eager=False)
-    exact_n = du.groupBy("segment").agg(F.count(F.lit(1)).alias("n"))
-    da = du.select(F.col("segment").alias("seg_a"), "u")
-    db = du.select(F.col("segment").alias("seg_b"), "u")
-    exact_int = (
-        da.join(db, "u")
-        .filter(F.col("seg_a") < F.col("seg_b"))
-        .groupBy("seg_a", "seg_b")
-        .agg(F.count(F.lit(1)).alias("n_int"))
-    )
-
     est_u = sketches.kmv_estimate(F.col("theta_u"), F.col("nc_u"), _KMV_K)
     return (
         pairs.join(F.broadcast(ps), ["seg_a", "seg_b"])
-        .join(exact_n.withColumnRenamed("segment", "seg_a").withColumnRenamed("n", "exact_a"), "seg_a")
-        .join(exact_n.withColumnRenamed("segment", "seg_b").withColumnRenamed("n", "exact_b"), "seg_b")
-        .join(exact_int, ["seg_a", "seg_b"], "left")
         .select(
             "seg_a",
             "seg_b",
-            "exact_a",
-            "exact_b",
-            F.coalesce(F.col("n_int"), F.lit(0)).alias("exact_int"),
             round4(sketches.kmv_estimate(F.col("theta_a"), F.col("nc_a"), _KMV_K)).alias("est_a"),
             round4(sketches.kmv_estimate(F.col("theta_b"), F.col("nc_b"), _KMV_K)).alias("est_b"),
             round4(est_u).alias("est_union"),

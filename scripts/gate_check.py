@@ -8,6 +8,7 @@ import json
 import sys
 import time
 import traceback
+from pathlib import Path
 
 
 def main() -> int:
@@ -21,7 +22,8 @@ def main() -> int:
     ap.add_argument("--names", nargs="*", default=None)
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    # gate the checkout this script lives in, not whatever is on sys.path
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from lab3_lakehouse_spark.session import build_session
     from lab3_lakehouse_spark.testing import check_query

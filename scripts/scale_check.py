@@ -39,7 +39,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from lab3_lakehouse_spark.catalog import TABLES, load_table, table_path
-from lab3_lakehouse_spark.queries import QUERIES
+from lab3_lakehouse_spark.queries import BODIES, QUERIES
 from lab3_lakehouse_spark.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -176,14 +176,11 @@ def cross_source_containment_prefix(spark, sf_dir):
 
 
 def workloads():
-    from bench import _bench_overrides
-
-    ov = _bench_overrides()
     return {
         "minhash_lsh_near_dups": QUERIES["minhash_lsh_near_dups"],
-        "dup_groups_connected_lsh_cc": ov["dup_groups_connected"],
+        "dup_groups_connected_lsh_cc": BODIES["dup_groups_connected"],
         "decontamination_ngram_overlap": QUERIES["decontamination_ngram_overlap"],
-        "doc_fingerprint_groups": ov["doc_fingerprint_matches"],
+        "doc_fingerprint_groups": BODIES["doc_fingerprint_matches"],
         "incremental_rollup_hourly": QUERIES["incremental_rollup_hourly"],
         "sql_late_order_priority": QUERIES["sql_late_order_priority"],
         # round-4 token-heavy additions: span explode + md5-keyed
@@ -289,11 +286,11 @@ def workloads():
         # round-9 late block: repair accounting (max-span + a second
         # doc-partitioned islands window — alpha ~ the span pass),
         # dedup-impact histogram (LSH-pair CC + two ≤-groups rollups —
-        # the bench-override composition, since the catalog's exact
-        # pair tier is the oracle twin), IVF balance (one map-side
+        # the registered body, since the catalog's exact pair tier is
+        # the oracle twin), IVF balance (one map-side
         # assignment scan + a ≤ k-row count — alpha ~ scan)
         "dup_span_repair_report": QUERIES["dup_span_repair_report"],
-        "dup_group_size_histogram_lsh_cc": ov["dup_group_size_histogram"],
+        "dup_group_size_histogram_lsh_cc": BODIES["dup_group_size_histogram"],
         "ivf_cell_balance_report": QUERIES["ivf_cell_balance_report"],
         # r9 final block: fertility (pure scan-side counting into a
         # ≤ sources grouped pass — alpha ~ scan), norm audit (embedding
@@ -301,19 +298,19 @@ def workloads():
         # embeddings unchanged so this row pins per-run overhead — the
         # amplified-embeddings assignment path is the SemDeDup/IVF-PQ
         # experiments), cross-source matrix (LSH pair source + bounded
-        # source rollup — the bench-override composition)
+        # source rollup — the registered body)
         "tokenizer_fertility_by_source": QUERIES["tokenizer_fertility_by_source"],
         "embedding_norm_audit": QUERIES["embedding_norm_audit"],
-        "cross_source_dup_matrix_lsh": ov["cross_source_dup_matrix"],
+        "cross_source_dup_matrix_lsh": BODIES["cross_source_dup_matrix"],
         # winsorized mean (one ranking window + boundary-statistic pass
         # + clamped average — the trimmed-mean cost class) and grouped
         # OLS (star join + daily pass + tiny sum pass — alpha ~ scan)
         "winsorized_mean_event_values": QUERIES["winsorized_mean_event_values"],
         "region_revenue_ols": QUERIES["region_revenue_ols"],
-        # density audit rides the LSH pipeline (bench-override
-        # composition) + two bounded grouped counts; curriculum sample
+        # density audit rides the LSH pipeline (the registered body)
+        # + two bounded grouped counts; curriculum sample
         # = two-phase global ranking + per-decile md5 window
-        "dup_component_density_lsh": ov["dup_component_density_audit"],
+        "dup_component_density_lsh": BODIES["dup_component_density_audit"],
         "length_stratified_sample": QUERIES["length_stratified_sample"],
         # round-10 additions: the persisted IVF-PQ store entry (the
         # fact amplifier carries embeddings unchanged, so this row pins
@@ -395,7 +392,7 @@ def workloads():
         # component-keyed window)
         "code_switch_langmix": QUERIES["code_switch_langmix"],
         "source_length_calibration": QUERIES["source_length_calibration"],
-        "dup_canonical_selection_lsh": ov["dup_canonical_selection"],
+        "dup_canonical_selection_lsh": BODIES["dup_canonical_selection"],
         # waves 7-8: Neyman allocation (one grouped-moments pass +
         # per-stratum hash-rank window — alpha ~ scan in docs), DP
         # release (grouped count + scalar noise — alpha ~ scan in
@@ -423,13 +420,12 @@ def workloads():
         # prefixed amplifier copies grow linearly
         "source_token_jsd": QUERIES["source_token_jsd"],
         "good_turing_oov_estimate": QUERIES["good_turing_oov_estimate"],
-        # leak-free split over the LSH pair source (the bench-override
-        # composition — the catalog's exact blocked tier is the oracle
-        # twin): banded candidates + CC + one corpus-wide left join and
+        # leak-free split over the LSH pair source (the registered
+        # body — the catalog's exact blocked tier is the oracle twin): banded candidates + CC + one corpus-wide left join and
         # component window — alpha ~ the LSH dedup cost class
-        "leakage_split_lsh": ov["leakage_safe_split_assignment"],
+        "leakage_split_lsh": BODIES["leakage_safe_split_assignment"],
         # round-12 additions: incremental split upkeep over the LSH
-        # pair source (bench-override composition; corpus CC + the
+        # pair source (the registered body; corpus CC + the
         # batch-sized contracted CC — the LSH dedup cost class), the
         # token-budget waterfill (one grouped token pass + bounded
         # windows — alpha ~ 1 in corpus tokens), the sample tier
@@ -439,7 +435,7 @@ def workloads():
         # in docs), and the streaming split assigner (stream + store
         # probe per micro-batch — the streaming_kll cost class with a
         # banded-probe leg that grows with the corpus index)
-        "incremental_split_lsh": ov["incremental_split_maintenance"],
+        "incremental_split_lsh": BODIES["incremental_split_maintenance"],
         "token_budget_epoch_allocation": QUERIES[
             "token_budget_epoch_allocation"
         ],
@@ -457,7 +453,7 @@ def workloads():
         "weighted_sample_store": QUERIES["weighted_sample_store"],
         # canonicalize-then-allocate composition over the LSH pair
         # source — the dedup cost class plus bounded waterfill math
-        "dedup_budget_lsh": ov["dedup_discounted_token_budget"],
+        "dedup_budget_lsh": BODIES["dedup_discounted_token_budget"],
         # round-13 additions: the drift→reindex→swap loop (two store
         # builds + linear re-encode passes — alpha ~ 1 in vectors, but
         # embeddings ride the amplifier unchanged so this row pins

@@ -1131,16 +1131,14 @@ def test_incremental_split_planted_statuses_and_no_straddle(
     # no-straddle sweep over EVERY >=0.8 pair in the union: corpus
     # rows keep their (unchanged) component-hash split; a pair may
     # cross sides only by passing through the flagged conflict cluster
-    from lab3_lakehouse_spark.queries.advstats import (
-        _word_jaccard_pairs_adv,
-    )
+    from lab3_lakehouse_spark.operators import dedup as dedup_ops
 
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
     corpus_split = {1: splits[1], 2: splits[1], 11: splits[11],
                     31: splits[31], 32: splits[31], 21: None}
     combined = {**corpus_split, **{d: out[d].split for d in out}}
     conflict_docs = {d for d in out if out[d].status == "conflict"}
-    for p in _word_jaccard_pairs_adv(docs).collect():
+    for p in dedup_ops.banded_word_jaccard_pairs(docs).collect():
         if {p.id_a, p.id_b} & conflict_docs:
             continue
         assert combined[p.id_a] == combined[p.id_b], (p.id_a, p.id_b)

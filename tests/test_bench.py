@@ -1,32 +1,34 @@
 """Bench harness regression tests.
 
-Round 2 shipped ``_bench_overrides()`` as dead code — ``main()`` kept
-timing the catalog bodies (which carry O(n²) verification scaffolding),
-so BENCH_r02 showed a phantom 3.5× regression on
-``doc_fingerprint_matches``. These tests pin the wiring so the bench
-always times the production operators.
+A bench that times a catalog contract instead of its production body
+bills the contract's verification work (a brute-force reference,
+exact counts) to the operator: round 2 once showed a phantom 3.5×
+regression on ``doc_fingerprint_matches`` that way. These tests pin
+the wiring so the bench always times the registered production
+bodies (``queries.registry.BODIES``).
 """
 
 from __future__ import annotations
 
+import pytest
+
 import bench
-from lab3_lakehouse_spark.queries import QUERIES
+from lab3_lakehouse_spark.queries import BODIES, QUERIES, body
 
 
-def test_every_override_targets_a_headline_query():
-    overrides = bench._bench_overrides()
-    assert overrides, "override table unexpectedly empty"
-    for name in overrides:
-        assert name in bench.HEADLINE, f"{name} overridden but not benched"
-        assert name in QUERIES, f"{name} overridden but not registered"
+def test_every_body_targets_a_headline_query():
+    assert BODIES, "body registry unexpectedly empty"
+    for name in BODIES:
+        assert name in bench.HEADLINE, f"{name} has a body but is not benched"
+        assert name in QUERIES, f"{name} has a body but is not registered"
 
 
-def test_timed_path_resolves_through_overrides():
-    """The timed path must consult _bench_overrides(), not QUERIES
-    directly — the exact bug of round 2 (defined but never called).
-    Since round 5 the timed path is run_single (executed in a fresh
-    child JVM per query); main() only orchestrates children."""
-    assert "_bench_overrides" in bench.run_single.__code__.co_names
+def test_timed_path_resolves_through_bodies():
+    """The timed path must consult BODIES, not QUERIES alone — the
+    bug of round 2 (bench bodies defined but never called). The timed
+    path is run_single (executed in a fresh child JVM per query);
+    main() only orchestrates children."""
+    assert "BODIES" in bench.run_single.__code__.co_names
     assert "_child" in bench.main.__code__.co_names
 
 
@@ -42,12 +44,28 @@ def test_fresh_jvm_child_measures_one_query(monkeypatch):
     assert 0 < secs < 120
 
 
-def test_overrides_differ_from_catalog_bodies():
-    """An override that just re-exports the catalog body would silently
-    reintroduce scaffolding into the timed path."""
-    overrides = bench._bench_overrides()
-    for name, fn in overrides.items():
-        assert fn is not QUERIES[name], f"{name} override is the catalog body"
+def test_bodies_differ_from_catalog_contracts():
+    """A body that just re-exports its contract entry would silently
+    reintroduce the verification work into the timed path."""
+    for name, fn in BODIES.items():
+        assert fn is not QUERIES[name], f"{name} body is the catalog contract"
+
+
+def test_body_registration_rejects_unknown_and_duplicate_names():
+    """A body must attach to an already-registered contract, once."""
+    with pytest.raises(ValueError, match="unregistered"):
+        body("no_such_query")(lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match="duplicate"):
+        body("ann_ivf_topk")(lambda spark, sf_dir: None)
+    assert "no_such_query" not in BODIES
+
+
+def test_every_body_runs_through_the_noop_sink(spark, sf_small):
+    """Execute every registered body end to end at the smallest scale,
+    through the bench's own sink: a body the gate never runs must still
+    run."""
+    for fn in BODIES.values():
+        bench.run_full(fn(spark, sf_small))
 
 
 def test_headline_names_are_registered():

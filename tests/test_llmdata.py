@@ -1528,9 +1528,9 @@ def test_lsh_frontier_scurve_shape(spark, sf_small):
         assert probs == sorted(probs)  # higher similarity -> higher P
     # the observed histogram partitions the >=0.8 exact pair tier
     from lab3_lakehouse_spark.catalog import fan_out, load_table
-    from lab3_lakehouse_spark.queries.llmdata import _word_jaccard_pairs
+    from lab3_lakehouse_spark.operators import dedup as dedup_ops
 
-    n_pairs_total = _word_jaccard_pairs(
+    n_pairs_total = dedup_ops.banded_word_jaccard_pairs(
         fan_out(load_table(spark, sf_small, "documents"))
     ).count()
     assert sum(r.n_pairs for r in rows if r.bands == 8) == n_pairs_total

@@ -11,7 +11,7 @@ import pytest
 
 from lab3_lakehouse_spark.catalog import load_table
 from lab3_lakehouse_spark.plans import analysis as pa
-from lab3_lakehouse_spark.queries import QUERIES
+from lab3_lakehouse_spark.queries import BODIES, QUERIES
 
 
 @pytest.fixture(scope="module")
@@ -521,12 +521,10 @@ def test_ivm_plan_never_rejoins_the_base(spark, sf):
 def test_kmv_pair_math_runs_on_sketch_frames(spark, sf):
     """After the per-segment sketch (one shuffle + partitioned window),
     every pair-merge join must be broadcast — k-row frames never
-    sort-merge. Pinned on the PRODUCTION path (the bench override):
-    the catalog body deliberately adds the exact-count honesty columns,
-    whose corpus-sized user self-join is a legitimate shuffle join."""
-    import bench
-
-    df = bench._bench_overrides()["kmv_audience_overlap"](spark, sf)
+    sort-merge. Pinned on the PRODUCTION body: the catalog contract
+    deliberately adds the exact-count honesty columns, whose
+    corpus-sized user self-join is a legitimate shuffle join."""
+    df = BODIES["kmv_audience_overlap"](spark, sf)
     assert pa.count_nodes(df, "SortMergeJoin") == 0
     # the only cross products are the documented 5x5 segment-pair
     # builds (broadcast singletons of the segment list)
