@@ -267,8 +267,8 @@ def run_continuous_index(
     from lab3_lakehouse_spark import stores
 
     retired = [
-        stores.swap_root(roots["bm25"], bm25_gc),
-        stores.swap_root(roots["kll"], kll_gc),
+        stores.swap_root(spark, roots["bm25"], bm25_gc),
+        stores.swap_root(spark, roots["kll"], kll_gc),
     ]
     swapped_bm25 = sorted(
         tuple(r)
@@ -323,7 +323,7 @@ def run_continuous_index(
             spark, refit_root, emb, "vec_id", "embedding"
         )
         new_cents, new_books = sim_ops.ivfpq_load_meta(spark, refit_root)
-        retired_ivfpq = stores.swap_root(roots["ivfpq"], refit_root)
+        retired_ivfpq = stores.swap_root(spark, roots["ivfpq"], refit_root)
         post_ann = sim_ops.ivfpq_store_topk(
             spark, roots["ivfpq"], emb, q8, "vec_id", "embedding",
             k=5, n_probe=8, rerank=400,

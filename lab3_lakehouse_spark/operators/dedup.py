@@ -397,15 +397,10 @@ def minhash_store_params(spark, store_root: str) -> tuple[int, int, int] | None:
     (pre-r14 stores — validation is skipped for them, the documented
     migration-free path). A store whose appends disagree on parameters
     is corrupt (its bands tier mixes incompatible bucketings) and
-    raises. Driver cost is bounded: the distinct of a 3-int sidecar.
-    Probed through the Hadoop FileSystem, so a URI store root (file://,
-    s3a://, hdfs://) is validated like a local path, not skipped."""
-    from lab3_lakehouse_spark import stores
-    from lab3_lakehouse_spark.sources.versioned import _fs
+    raises. Driver cost is bounded: the distinct of a 3-int sidecar."""
+    from lab3_lakehouse_spark import fs, stores
 
-    params_path = stores.tier_path(store_root, "params")
-    fs, jpath = _fs(spark, params_path)
-    if not fs.exists(jpath(params_path)):
+    if not fs.exists(spark, stores.tier_path(store_root, "params")):
         return None
     rows = (
         stores.read_tier(spark, store_root, "params").distinct().collect()

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_lakehouse_spark import fs
+
 #: partial-aggregate columns a rollup row carries for one measure.
 PARTIALS = ("cnt", "sum_v", "min_v", "max_v")
 
@@ -62,19 +64,16 @@ def combine_partials(parts: DataFrame, keys: list[str]) -> DataFrame:
 def table_exists(spark: SparkSession, path: str, fmt: str = "parquet") -> bool:
     """Existence probe that never launches a Spark job on the happy path.
 
-    Classic sessions: Hadoop-FileSystem check — works on local FS, HDFS,
-    and object stores alike. Spark Connect sessions have no ``_jvm``
-    (py4j private API is gone), so fall back to a driver-side schema
-    probe catching ``AnalysisException`` ONLY — a missing path analyzes
+    Classic sessions: :func:`lab3_lakehouse_spark.fs.exists`. Spark
+    Connect sessions have no ``_jvm`` (py4j private API is gone), so
+    fall back to a driver-side schema probe catching
+    ``AnalysisException`` ONLY — a missing path analyzes
     as PATH_NOT_FOUND, while transient FS errors / corrupt footers /
     permission failures raise other exception types and propagate (see
     the refresh_rollup comment for why a broad except would be
     history-destroying)."""
-    if hasattr(spark, "_jvm") and spark._jvm is not None:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
+    if getattr(spark, "_jvm", None) is not None:
+        return fs.exists(spark, path)
     from pyspark.errors import AnalysisException
 
     try:

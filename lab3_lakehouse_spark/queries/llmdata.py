@@ -1578,7 +1578,7 @@ def ann_store_reindex_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
             rerank_vecs, k=5, n_probe=8, rerank=400,
         ).localCheckpoint(eager=False)  # feeds both exceptAll legs
 
-        retired = stores.swap_root(root, new_root)
+        retired = stores.swap_root(spark, root, new_root)
         shutil.rmtree(retired, ignore_errors=True)
 
         # post-swap probe of the LIVE root — now the refit index
@@ -1698,7 +1698,7 @@ def minhash_band_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)  # executes BEFORE the swap
         )                                 # renames new_root away
 
-        retired = stores.swap_root(root, new_root)
+        retired = stores.swap_root(spark, root, new_root)
         shutil.rmtree(retired, ignore_errors=True)
 
         # post-swap probe of the LIVE path — now the rebanded tier

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lab3_lakehouse_spark import fs
+
 #: the tier's recorded data schema (``StructType.json()``). The leading
 #: ``_`` makes Spark's file index skip it; ``_metadata`` and
 #: ``_common_metadata`` would be read as Parquet summary files.
@@ -261,27 +263,18 @@ def merge_into(
     )
     # parquet has no transaction log: Spark cannot overwrite a path it
     # is reading from, so stage the rewrite next to the tier and swap
-    # via a same-filesystem rename (works on HDFS/S3A-committer/local;
-    # the delete→rename window is the non-transactional cost vs Delta)
     staging = path.rstrip("/") + ".__staging__"
     _save(merged, staging, fmt)
-    fs, jpath = _hadoop_fs(spark, path)
-    fs.delete(jpath(path), True)
-    fs.rename(jpath(staging), jpath(path))
+    _swap_in(spark, staging, path)
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem handle (local/HDFS/S3A) — classic sessions
-    only: Spark Connect has no py4j ``_jvm``, and a staged-rename swap
-    has no metadata fallback, so fail with a diagnostic up front
-    (same hazard class as rollup.table_exists / versioned._fs)."""
-    if not (hasattr(spark, "_jvm") and spark._jvm is not None):
-        raise RuntimeError(
-            "merge_into/compact_tier need a classic (py4j) SparkSession: "
-            "Spark Connect has no JVM handle for Hadoop FileSystem renames"
-        )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    return jpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+def _swap_in(spark: SparkSession, staging: str, path: str) -> None:
+    """Replace the tier at ``path`` with ``staging``: delete, then
+    rename — the window between them is the non-transactional cost vs
+    Delta; a failed rename raises with the data intact in ``staging``."""
+    fsys, tier = fs.handle(spark, path)
+    fsys.delete(tier, True)
+    fs.rename(spark, staging, path)
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -298,24 +291,13 @@ def _nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def _schema_file(spark: SparkSession, path: str, fmt: str):
-    """``(fs, Path)`` of the tier's schema record, or None where no
-    record is kept: non-parquet formats, and Spark Connect sessions,
-    which have no JVM handle to the filesystem."""
+def _schema_file(spark: SparkSession, path: str, fmt: str) -> str | None:
+    """Path of the tier's schema record, or None where no record is
+    kept: non-parquet formats, and Spark Connect sessions, which have
+    no JVM handle to the filesystem."""
     if fmt != "parquet" or getattr(spark, "_jvm", None) is None:
         return None
-    fs, jpath = _hadoop_fs(spark, path)
-    return fs, jpath(f"{path.rstrip('/')}/{SCHEMA_FILE}")
-
-
-def _recorded_schema(fs, at) -> str | None:
-    if not fs.exists(at):
-        return None
-    stream = fs.open(at)
-    try:
-        return bytes(stream.readAllBytes()).decode()
-    finally:
-        stream.close()
+    return f"{path.rstrip('/')}/{SCHEMA_FILE}"
 
 
 def _save(
@@ -336,18 +318,17 @@ def _save(
     writer = df.write.format(fmt).mode(mode).options(**options)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    record = _schema_file(df.sparkSession, path, fmt)
-    if record is None:
+    spark = df.sparkSession
+    at = _schema_file(spark, path, fmt)
+    if at is None:
         writer.save(path)
         return
-    fs, at = record
     dynamic = bool(partition_by) and options.get(
         "partitionOverwriteMode",
-        df.sparkSession.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        ),
+        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static"),
     ).lower() == "dynamic"
-    fs.delete(at, False)
+    fsys, record = fs.handle(spark, at)
+    fsys.delete(record, False)
     writer.save(path)
     if mode.lower() != "overwrite" or dynamic:
         return
@@ -355,11 +336,7 @@ def _save(
     schema = _nullable(
         T.StructType([f for f in df.schema if f.name.lower() not in parts])
     ).json()
-    out = fs.create(at, True)
-    try:
-        out.write(bytearray(schema.encode()))
-    finally:
-        out.close()
+    fs.write_text(spark, at, schema)
 
 
 def compact_tier(
@@ -387,19 +364,17 @@ def compact_tier(
     merge_into pattern, same non-transactional window.
 
     Returns ``{"files_before", "files_after", "bytes", "n_target"}``
-    for observability/assertions. Uses the Hadoop FS API via py4j
-    (HDFS/S3A/local); like merge_into, classic sessions only.
+    for observability/assertions. Storage goes through
+    :mod:`lab3_lakehouse_spark.fs` (any URI scheme); like merge_into,
+    classic sessions only.
     """
     import math
 
-    fs, jpath = _hadoop_fs(spark, path)
+    fsys, tier = fs.handle(spark, path)
 
     def _data_files() -> int:
-        it, n = fs.listFiles(jpath(path), True), 0
-        while it.hasNext():
-            f = it.next().getPath().getName()
-            n += not (f.startswith("_") or f.startswith("."))
-        return n
+        names = (f.rsplit("/", 1)[-1] for f in fs.list_files(spark, path))
+        return sum(not n.startswith(("_", ".")) for n in names)
 
     if fmt == "delta" and _delta_available():  # pragma: no cover - env-gated
         from delta.tables import DeltaTable
@@ -408,11 +383,11 @@ def compact_tier(
         DeltaTable.forPath(spark, path).optimize().executeCompaction()
         return {
             "files_before": before, "files_after": _data_files(),
-            "bytes": fs.getContentSummary(jpath(path)).getLength(),
+            "bytes": fsys.getContentSummary(tier).getLength(),
             "n_target": -1,
         }
 
-    total = fs.getContentSummary(jpath(path)).getLength()
+    total = fsys.getContentSummary(tier).getLength()
     n_target = max(1, math.ceil(total / target_file_bytes))
     before = _data_files()
     df = read_tier(spark, path, fmt)
@@ -425,8 +400,7 @@ def compact_tier(
         out = df.repartition(n_target)
     staging = path.rstrip("/") + ".__compacting__"
     _save(out, staging, fmt, partition_by=partition_by)
-    fs.delete(jpath(path), True)
-    fs.rename(jpath(staging), jpath(path))
+    _swap_in(spark, staging, path)
     return {
         "files_before": before,
         "files_after": _data_files(),
@@ -444,8 +418,8 @@ def read_tier(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame
     infers the schema from a footer as a plain ``spark.read`` does —
     one Spark job per call; Delta reads its schema from its log."""
     reader = spark.read.format(fmt)
-    record = _schema_file(spark, path, fmt)
-    recorded = _recorded_schema(*record) if record else None
+    at = _schema_file(spark, path, fmt)
+    recorded = fs.read_text(spark, at) if at else None
     if recorded:
         reader = reader.schema(T.StructType.fromJson(json.loads(recorded)))
     return reader.load(path)

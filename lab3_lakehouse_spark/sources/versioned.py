@@ -14,7 +14,7 @@ module closes that gap with parquet + filesystem primitives only:
 - a snapshot only becomes visible once Spark's job commit drops
   ``_SUCCESS`` into it (half-written snapshots are invisible);
 - ``_LATEST`` marker: one tiny file whose content is the pinned
-  version, published by write-temp + atomic ``FileSystem.rename`` —
+  version, published by write-temp + rename (``fs.write_text``) —
   rollback is a metadata-only repoint, not a data rewrite;
 - ``vacuum`` deletes all but the trailing K snapshots (never the
   pinned one) — Delta ``VACUUM`` parity.
@@ -32,66 +32,28 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lab3_lakehouse_spark import fs
+
 _VDIR = re.compile(r"^v=(\d{8})$")
-
-
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem handle for ``path`` (works for local/HDFS/S3A).
-
-    Requires a classic session: Spark Connect exposes no py4j ``_jvm``
-    handle, so snapshot listing/commit-marker checks cannot run there —
-    fail with a diagnostic instead of an AttributeError (same hazard
-    class as rollup.table_exists / catalog.fan_out, which have
-    metadata-based fallbacks; a filesystem mutation has none).
-    """
-    if not (hasattr(spark, "_jvm") and spark._jvm is not None):
-        raise RuntimeError(
-            "versioned tiers need a classic (py4j) SparkSession: Spark "
-            "Connect has no JVM handle for Hadoop FileSystem operations"
-        )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    return jpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def _committed_versions(spark: SparkSession, path: str) -> list[int]:
     """Versions whose snapshot directory carries a ``_SUCCESS`` commit
     marker, ascending."""
-    fs, jpath = _fs(spark, path)
-    if not fs.exists(jpath(path)):
+    fsys, root = fs.handle(spark, path)
+    if not fsys.exists(root):
         return []
     out = []
-    for st in fs.listStatus(jpath(path)):
+    for st in fsys.listStatus(root):
         m = _VDIR.match(st.getPath().getName())
-        if m and fs.exists(jpath(f"{path}/v={m.group(1)}/_SUCCESS")):
+        if m and fs.exists(spark, f"{path}/v={m.group(1)}/_SUCCESS"):
             out.append(int(m.group(1)))
     return sorted(out)
 
 
 def _read_marker(spark: SparkSession, path: str) -> int | None:
-    fs, jpath = _fs(spark, path)
-    marker = jpath(f"{path}/_LATEST")
-    if not fs.exists(marker):
-        return None
-    stream = fs.open(marker)
-    try:
-        raw = bytes(stream.readAllBytes()).decode().strip()
-    finally:
-        stream.close()
+    raw = (fs.read_text(spark, f"{path}/_LATEST") or "").strip()
     return int(raw) if raw else None
-
-
-def _write_marker(spark: SparkSession, path: str, version: int) -> None:
-    """Publish the pinned version via write-temp + atomic rename."""
-    fs, jpath = _fs(spark, path)
-    tmp = jpath(f"{path}/_LATEST.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(str(version).encode()))
-    finally:
-        out.close()
-    final = jpath(f"{path}/_LATEST")
-    fs.delete(final, False)
-    fs.rename(tmp, final)
 
 
 def write_version(
@@ -110,7 +72,7 @@ def write_version(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(f"{path}/v={new_v:08d}")
-    _write_marker(spark, path, new_v)
+    fs.write_text(spark, f"{path}/_LATEST", str(new_v))
     return new_v
 
 
@@ -150,20 +112,20 @@ def rollback(spark: SparkSession, path: str, version: int) -> None:
     no data rewrite; later snapshots stay readable by explicit pin."""
     if version not in _committed_versions(spark, path):
         raise ValueError(f"cannot roll back to uncommitted version {version}")
-    _write_marker(spark, path, version)
+    fs.write_text(spark, f"{path}/_LATEST", str(version))
 
 
 def vacuum(spark: SparkSession, path: str, keep_last: int = 2) -> list[int]:
     """Delete all but the trailing ``keep_last`` snapshots; the pinned
     snapshot is always kept. Returns the versions removed."""
-    fs, jpath = _fs(spark, path)
     committed = _committed_versions(spark, path)
     pinned = _read_marker(spark, path)
     keep = set(committed[-keep_last:]) | ({pinned} if pinned else set())
     removed = []
     for v in committed:
         if v not in keep:
-            fs.delete(jpath(f"{path}/v={v:08d}"), True)
+            fsys, snapshot = fs.handle(spark, f"{path}/v={v:08d}")
+            fsys.delete(snapshot, True)
             removed.append(v)
     return removed
 

@@ -37,8 +37,8 @@ module owns so each family implements only its domain math:
   to read a data tier wholesale; it writes the re-clustered result to
   a **new** root (:func:`gc_write`, ``mode("error")``) so probes
   against the live root are never disturbed — swap-in is
-  :func:`swap_root` (two atomic renames with documented crash
-  recovery; on an object store, the catalog-location repoint).
+  :func:`swap_root` (two renames that never overwrite, with documented
+  crash recovery; on an object store, the catalog-location repoint).
   Probe results from the compacted tier must be identical (pinned per
   family by the randomized-append GC property tests; probe-equality
   across an executed swap is pinned by test_swap_root_*).
@@ -54,6 +54,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from lab3_lakehouse_spark import fs
 
 
 @dataclass(frozen=True)
@@ -201,45 +203,39 @@ def gc_write(
     out.write.mode("error").parquet(tier_path(dst_root, tier))
 
 
-def swap_root(live_root: str, new_root: str) -> str:
+def swap_root(spark, live_root: str, new_root: str) -> str:
     """Promote a GC'd store root over the live one — the swap-in step
-    the :func:`gc_write` contract leaves to the caller, now executable
-    instead of prose. Two atomic directory renames::
+    the :func:`gc_write` contract leaves to the caller. Two directory
+    renames through :func:`lab3_lakehouse_spark.fs.rename`, which never
+    overwrites and raises on any failure, on any URI scheme::
 
         (1) live_root  → live_root + ".retired"
         (2) new_root   → live_root
 
     Returns the retired path; the caller deletes it once satisfied
-    (keeping it makes the swap trivially reversible).
-
-    Crash-safety ordering: each rename is atomic (same-filesystem
-    ``os.replace`` semantics), so no state ever loses data. A crash
-    between (1) and (2) leaves ``{live}.retired`` + ``new_root`` both
-    intact — recovery is "rename whichever you want live back into
-    place". (2) failing rolls (1) back automatically, so callers never
-    observe a half-swap. Probes that already OPENED files under the old
-    root keep reading them (POSIX rename doesn't invalidate open
-    handles); a probe that plans DURING the swap window can fail on the
-    briefly-absent path and must retry — on an object store or HDFS
-    deployment, the equivalent step is the catalog/metastore location
-    repoint, which has no window at all. Refuses to run if a previous
-    swap's retired root is still present (delete or recover it first:
-    silently stacking retired roots is how data loss hides)."""
-    import os
-
+    (keeping it makes the swap trivially reversible). No state loses
+    data: a crash between (1) and (2) leaves ``{live}.retired`` and
+    ``new_root`` intact (recovery: rename either back into place), and
+    (2) failing renames (1) back, so callers never observe a half-swap.
+    A probe that plans DURING the swap window can fail on the
+    briefly-absent path and must retry; on an object store, where a
+    directory rename is a copy, the equivalent step is the catalog
+    location repoint, which has no window. Refuses to run while a
+    previous swap's retired root is present (silently stacking retired
+    roots is how data loss hides) or if ``new_root`` is no directory."""
     retired = live_root.rstrip("/") + ".retired"
-    if os.path.exists(retired):
+    if fs.exists(spark, retired):
         raise FileExistsError(
             f"{retired} exists — finish (delete) or recover the previous "
             "swap before running another"
         )
-    if not os.path.isdir(new_root):
+    if not fs.is_dir(spark, new_root):
         raise FileNotFoundError(f"new root {new_root} is not a directory")
-    os.rename(live_root, retired)
+    fs.rename(spark, live_root, retired)
     try:
-        os.rename(new_root, live_root)
-    except OSError:
-        os.rename(retired, live_root)  # rollback: never a half-swap
+        fs.rename(spark, new_root, live_root)
+    except Exception:
+        fs.rename(spark, retired, live_root)  # rollback: never a half-swap
         raise
     return retired
 

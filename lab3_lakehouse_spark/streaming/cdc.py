@@ -15,11 +15,10 @@ idempotent because MERGE is (same keys → same final row).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lab3_lakehouse_spark import fs
 from lab3_lakehouse_spark.operators.merge import OP_DELETE
 from lab3_lakehouse_spark.sources.medallion import merge_into
 
@@ -64,7 +63,7 @@ def cdc_to_tier(
         spark = batch_df.sparkSession
         latest = latest_change_per_key(batch_df, keys, sequence_col)
         source = latest.drop(sequence_col)
-        if not os.path.exists(path):  # local/HDFS bootstrap
+        if not fs.exists(spark, path):  # bootstrap, on any URI scheme
             source.filter(F.col(op_col) != OP_DELETE).drop(op_col).write.format(
                 fmt
             ).save(path)

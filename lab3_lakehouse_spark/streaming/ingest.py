@@ -49,8 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lab3_lakehouse_spark import fs
 from lab3_lakehouse_spark.operators import dedup as dedup_ops
-from lab3_lakehouse_spark.sources.versioned import _fs
 
 #: Arriving-document schema for the file stream (one JSON doc per line).
 DOC_STREAM_SCHEMA = T.StructType(
@@ -72,11 +72,8 @@ def _hashed(docs: DataFrame) -> DataFrame:
 def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Bootstrap-safe tier read: before the first batch lands, the
     corpus/store paths don't exist yet — an empty frame with the right
-    schema keeps every join in the batch body uniform. Probed through
-    the Hadoop FileSystem, so a URI root (file://, s3a://, hdfs://)
-    reads its existing tiers instead of silently reading them empty."""
-    fs, jpath = _fs(spark, path)
-    if fs.exists(jpath(path)):
+    schema keeps every join in the batch body uniform."""
+    if fs.exists(spark, path):
         return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
 
@@ -442,11 +439,8 @@ def stream_ivfpq_append(
     # micro-batch (r14 — two bounded collects per trigger removed).
     # Explicit existence check (r14 advice): fail at setup with the
     # ordering requirement, not with a parquet path error mid-load.
-    # Probed through the Hadoop FileSystem, so any store URI scheme
-    # (s3a://, hdfs://, file://, bare local paths) is checked the same.
-    fs, jpath = _fs(spark, store_root)
     for tier in ("centroids", "codebooks"):
-        if not fs.exists(jpath(stores.tier_path(store_root, tier))):
+        if not fs.exists(spark, stores.tier_path(store_root, tier)):
             raise ValueError(
                 f"stream_ivfpq_append: store {store_root!r} has no "
                 f"'{tier}' tier — run ivfpq_store_init BEFORE creating "

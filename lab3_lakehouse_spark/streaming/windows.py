@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lab3_lakehouse_spark import fs
+
 #: Raw parquet schema of events.parquet when ``ts`` is stored as
 #: TIMESTAMP(NANOS) or a plain INT64 of epoch-nanos: surfaced as long
 #: (under ``nanosAsLong`` for the former) — streaming readers need the
@@ -96,14 +98,12 @@ def stream_events(
     ``ts_encoding='nanos'`` or ``'micros'`` (the probe raises rather
     than guess — a wrong guess mis-decodes every timestamp by 1000×).
     """
-    import os
-
     if ts_encoding not in (None, "nanos", "micros"):
         raise ValueError(f"ts_encoding must be 'nanos'|'micros'|None, got {ts_encoding!r}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
     nanos = _ts_stored_as_nanos(path) if ts_encoding is None else ts_encoding == "nanos"
-    if not os.path.isdir(path):
+    if not fs.is_dir(spark, path):
         # single-file source: FileStreamSource requires a directory or a
         # glob — bracketing the last char forces glob semantics, which
         # makes basePath default to the parent directory

@@ -1241,7 +1241,7 @@ def test_ivfpq_refit_swap_serves_new_index(
     new_cents, new_books = sim_ops.ivfpq_load_meta(spark, refit)
     assert old_cents != new_cents  # the refit moved real bits
 
-    retired = stores.swap_root(live, refit)
+    retired = stores.swap_root(spark, live, refit)
     queries = emb.filter(F.col("vec_id") % 30 == 0)
     store = sim_ops.ivfpq_store_topk(
         spark, live, emb, queries, "vec_id", "embedding",

@@ -103,13 +103,16 @@ def test_merge_into_parquet_tier_roundtrip(spark, tmp_path):
     }
 
 
-def test_streaming_cdc_apply_builds_and_evolves_tier(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_streaming_cdc_apply_builds_and_evolves_tier(spark, tmp_path, scheme):
     """File-source CDC stream → cdc_to_tier: bootstrap batch, then an
     incremental batch (same checkpoint) carrying multiple changes per
-    key, an update, a delete, and an insert."""
+    key, an update, a delete, and an insert. On a file:// tier the
+    second batch must merge, not take the bootstrap branch again."""
     from lab3_lakehouse_spark.streaming import cdc
 
-    chg, ckpt, tier = (str(tmp_path / d) for d in ("chg", "ckpt", "tier"))
+    chg, ckpt = (str(tmp_path / d) for d in ("chg", "ckpt"))
+    tier = f"{scheme}{tmp_path}/tier"
     schema = "k int, v string, seq int, __op string"
 
     def run():

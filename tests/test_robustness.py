@@ -159,15 +159,14 @@ def test_pipeline_publishes_only_redacted_text(spark, sf_small, tmp_path):
 
 def test_hadoop_fs_helpers_raise_clearly_without_jvm():
     """Spark Connect sessions (no py4j _jvm) must get a diagnostic, not
-    an AttributeError, from the filesystem-mutating helpers."""
+    an AttributeError, from the one FileSystem entry point every tier
+    and store path operation goes through."""
     import pytest
 
-    from lab3_lakehouse_spark.sources.medallion import _hadoop_fs
-    from lab3_lakehouse_spark.sources.versioned import _fs
+    from lab3_lakehouse_spark import fs
 
     class FakeConnectSession:
         _jvm = None
 
-    for helper in (_hadoop_fs, _fs):
-        with pytest.raises(RuntimeError, match="classic"):
-            helper(FakeConnectSession(), "/tmp/x")
+    with pytest.raises(RuntimeError, match="classic"):
+        fs.handle(FakeConnectSession(), "/tmp/x")

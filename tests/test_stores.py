@@ -271,22 +271,25 @@ def test_kll_gc_estimates_identical_under_random_append_history(
     assert n_post <= n_pre
 
 
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
 def test_swap_root_promotes_gc_root_with_identical_probes(
-    spark, tmp_path
+    spark, tmp_path, scheme
 ):
     """r11 verdict task #4: the GC contract's swap-in step is now an
     executable primitive, not prose. Compact a BM25 store to a new
     root, swap it over the live path, and the probe against the LIVE
     path (the one consumers keep configured) returns exactly the
     pre-swap results; the retired root keeps the fragmented tiers
-    intact so the swap is reversible."""
+    intact so the swap is reversible. A file:// root swaps like a
+    plain path (snapshot_files is a local glob, so it gets the plain
+    path)."""
     import os
 
     from lab3_lakehouse_spark.operators import text as text_ops
 
     docs = _docs(spark)
-    live = str(tmp_path / "bm25_live")
-    gc = str(tmp_path / "bm25_gc")
+    live_dir, gc_dir = str(tmp_path / "bm25_live"), str(tmp_path / "bm25_gc")
+    live, gc = scheme + live_dir, scheme + gc_dir
     for part in (0, 1):
         text_ops.bm25_append_batch(
             live, docs.filter(F.col("doc_id") % 2 == part)
@@ -299,9 +302,9 @@ def test_swap_root_promotes_gc_root_with_identical_probes(
         tuple(r)
         for r in text_ops.bm25_topk_from_store(spark, live, q, k=5).collect()
     )
-    n_live_files = len(stores.snapshot_files(live))
+    n_live_files = len(stores.snapshot_files(live_dir))
     text_ops.bm25_compact_store(spark, live, gc, buckets=4)
-    retired = stores.swap_root(live, gc)
+    retired = stores.swap_root(spark, live, gc)
     assert retired == live + ".retired"
     # probe the LIVE path — consumers never re-point anything
     post = sorted(
@@ -310,11 +313,12 @@ def test_swap_root_promotes_gc_root_with_identical_probes(
     )
     assert post == pre and len(post) > 0
     # the fragmented store is intact under the retired path (reversible)
-    assert len(stores.snapshot_files(retired)) == n_live_files
-    assert not os.path.exists(gc)
+    assert len(stores.snapshot_files(live_dir + ".retired")) == n_live_files
+    assert not os.path.exists(gc_dir)
 
 
-def test_swap_root_refuses_unsafe_states(tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_swap_root_refuses_unsafe_states(spark, tmp_path, scheme):
     """swap_root's guard rails: a stacked retired root (a previous
     swap never cleaned up) and a missing new root both refuse before
     ANY rename happens — the live store is untouched."""
@@ -325,16 +329,162 @@ def test_swap_root_refuses_unsafe_states(tmp_path):
     (live / "marker").write_text("live")
     # missing new root: refuse, live untouched
     with pytest.raises(FileNotFoundError):
-        stores.swap_root(str(live), str(tmp_path / "nope"))
+        stores.swap_root(spark, f"{scheme}{live}", f"{scheme}{tmp_path}/nope")
     assert (live / "marker").read_text() == "live"
     # stacked retired root: refuse, live untouched
     new = tmp_path / "new"
     new.mkdir()
     os.mkdir(str(live) + ".retired")
     with pytest.raises(FileExistsError):
-        stores.swap_root(str(live), str(new))
+        stores.swap_root(spark, f"{scheme}{live}", f"{scheme}{new}")
     assert (live / "marker").read_text() == "live"
     assert new.is_dir()
+
+
+def test_swap_root_rolls_back_when_second_rename_fails(
+    spark, tmp_path, monkeypatch
+):
+    """The new root vanishes after swap_root's checks, so rename (2)
+    fails after rename (1) retired the live root: swap_root must rename
+    the retired root back and re-raise — never a half-swap."""
+    import os
+    import shutil
+
+    from py4j.protocol import Py4JJavaError
+
+    from lab3_lakehouse_spark import fs
+
+    live, new = tmp_path / "store", tmp_path / "new"
+    live.mkdir()
+    (live / "marker").write_text("live")
+    new.mkdir()
+    is_dir = fs.is_dir
+
+    def vanishes_after_check(spark, path):
+        ok = is_dir(spark, path)
+        shutil.rmtree(path)
+        return ok
+
+    monkeypatch.setattr(fs, "is_dir", vanishes_after_check)
+    with pytest.raises((OSError, Py4JJavaError)):
+        stores.swap_root(spark, str(live), str(new))
+    assert (live / "marker").read_text() == "live"
+    assert not os.path.exists(str(live) + ".retired")
+
+
+def test_fs_rename_never_overwrites_and_raises_on_failure(
+    spark, tmp_path, monkeypatch
+):
+    """fs.rename refuses an existing destination and leaves it
+    unchanged: Hadoop's local FileSystem would instead move the source
+    directory INTO it and return True. A rename the FileSystem reports
+    as failed (HDFS returns False) raises instead of passing silently."""
+    import os
+
+    from lab3_lakehouse_spark import fs
+
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.mkdir()
+    (src / "a").write_text("src")
+    dst.mkdir()
+    (dst / "z").write_text("dst")
+    for scheme in ("", "file://"):
+        with pytest.raises(FileExistsError):
+            fs.rename(spark, f"{scheme}{src}", f"{scheme}{dst}")
+        assert sorted(os.listdir(dst)) == ["z"]
+        assert (dst / "z").read_text() == "dst"
+        assert (src / "a").read_text() == "src"
+
+    class RenameReturnsFalse:
+        def exists(self, path):
+            return False
+
+        def rename(self, src, dst):
+            return False
+
+    monkeypatch.setattr(fs, "handle", lambda spark, p: (RenameReturnsFalse(), p))
+    with pytest.raises(OSError, match="failed"):
+        fs.rename(spark, str(src), str(tmp_path / "elsewhere"))
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_ivfpq_store_lifecycle_on_uri_root(spark, tmp_path, scheme):
+    """A store's whole lifecycle on one root: init, batch append, one
+    streaming batch against the existing tier, probe, refit to a new
+    root, swap_root, and a probe of the live path. Every probe must
+    equal the in-memory index over the same vectors and metadata, so a
+    file:// root answers exactly as a plain path does."""
+    import json
+    import os
+
+    from lab3_lakehouse_spark.streaming import ingest as st_ingest
+
+    vecs = _vectors(spark)
+    rows = [(r.vec_id, list(r.embedding)) for r in vecs.collect()]
+    live = f"{scheme}{tmp_path}/ivfpq"
+    refit = f"{scheme}{tmp_path}/ivfpq_refit"
+    queries = vecs.filter(F.col("vec_id") % 20 == 0)
+    fit = dict(n_centroids=4, dim=16, m=4, n_codes=8)
+    probe_args = dict(k=5, n_probe=2, rerank=40)
+
+    def probe(root):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.rank)
+            for r in sim_ops.ivfpq_store_topk(
+                spark, root, vecs, queries, "vec_id", "embedding",
+                **probe_args,
+            ).collect()
+        )
+
+    def in_memory(root):
+        cents, books = sim_ops.ivfpq_load_meta(spark, root)
+        index = sim_ops.pq_encode(
+            sim_ops.assign_cells_literal(vecs, "vec_id", "embedding", cents),
+            "neighbor_id", "__cvec", books, keep=("__cell",),
+        ).select("neighbor_id", "__cell", "__codes")
+        return sorted(
+            (r.query_id, r.neighbor_id, r.rank)
+            for r in sim_ops.ivfpq_probe_index(
+                index, books, cents, queries, "vec_id", "embedding",
+                vecs.select(
+                    F.col("vec_id").alias("neighbor_id"),
+                    F.col("embedding").alias("__cvec"),
+                ),
+                **probe_args,
+            ).collect()
+        )
+
+    # stale fit on the even half; the corpus arrives as a batch + a stream
+    sim_ops.ivfpq_store_init(
+        live, vecs.filter(F.col("vec_id") % 2 == 0), "vec_id", "embedding",
+        **fit,
+    )
+    sim_ops.ivfpq_store_append(
+        spark, live, vecs.filter(F.col("vec_id") < 60), "vec_id", "embedding"
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "f0.json").write_text("\n".join(
+        json.dumps({"vec_id": vid, "embedding": vec})
+        for vid, vec in rows if vid >= 60
+    ))
+    stream = st_ingest.stream_ivfpq_append(spark, str(src), live)
+    try:
+        stream.processAllAvailable()
+    finally:
+        stream.stop()
+    assert stores.read_tier(spark, live, "codes").count() == len(rows)
+    stale = probe(live)
+    assert stale == in_memory(live) and len(stale) == 5 * 4
+
+    # refit on the full corpus into a NEW root, then swap it in
+    sim_ops.ivfpq_store_init(refit, vecs, "vec_id", "embedding", **fit)
+    sim_ops.ivfpq_store_append(spark, refit, vecs, "vec_id", "embedding")
+    want = in_memory(refit)
+    retired = stores.swap_root(spark, live, refit)
+    assert retired == live + ".retired"
+    assert not os.path.exists(f"{tmp_path}/ivfpq_refit")
+    assert probe(live) == want
 
 
 def test_kll_compacted_tier_survives_fresh_checkpoint_restart(
