@@ -264,7 +264,7 @@ def run_continuous_index(
     # documented there) and re-probe the LIVE paths: consumers keep
     # their configured root and see identical results; the retired
     # fragmented roots are deleted once the probes agree.
-    from lab3_lakehouse_spark import stores
+    from lab3_lakehouse_spark import fs, stores
 
     retired = [
         stores.swap_root(spark, roots["bm25"], bm25_gc),
@@ -285,7 +285,7 @@ def run_continuous_index(
     out["swap_identical"] = swapped_bm25 == got and swapped_ests == ests
     assert out["swap_identical"]
     for r in retired:
-        shutil.rmtree(r)
+        fs.delete(spark, r)
 
     # ---- drift→reindex→swap (the ann_store_reindex_swap registry
     # entry's production shape): when the centroid-drift monitor fires
@@ -350,7 +350,7 @@ def run_continuous_index(
         )
         out["reindex_swap_serves_refit"] = got_post == want_post
         assert out["reindex_swap_serves_refit"]
-        shutil.rmtree(retired_ivfpq)
+        fs.delete(spark, retired_ivfpq)
     return out
 
 

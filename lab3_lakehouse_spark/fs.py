@@ -43,12 +43,23 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
         raise OSError(f"FileSystem.rename({src}, {dst}) failed")
 
 
-def list_files(spark: SparkSession, root: str) -> list[str]:
-    """Every file under ``root``, recursively, as path strings."""
+def delete(spark: SparkSession, path: str) -> None:
+    """Remove ``path`` and everything under it; a missing path is a
+    no-op. Raises ``OSError`` if the FileSystem reports failure and the
+    path is still there."""
+    fs, p = handle(spark, path)
+    if not fs.delete(p, True) and fs.exists(p):
+        raise OSError(f"FileSystem.delete({path}) failed")
+
+
+def list_files(spark: SparkSession, root: str) -> dict[str, tuple[int, int]]:
+    """Every file under ``root``, recursively: path string → (length in
+    bytes, modification time in ms), from the listing's FileStatus."""
     fs, p = handle(spark, root)
-    it, out = fs.listFiles(p, True), []
+    it, out = fs.listFiles(p, True), {}
     while it.hasNext():
-        out.append(it.next().getPath().toString())
+        st = it.next()
+        out[st.getPath().toString()] = (st.getLen(), st.getModificationTime())
     return out
 
 

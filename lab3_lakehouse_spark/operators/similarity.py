@@ -1226,7 +1226,12 @@ def _ivfpq_pruned_codes(
     _bm25_pruned_postings pattern). The tier is read with its known
     layout (:func:`ivfpq_store_append` writes it; ``id_type`` is the
     corpus id type the neighbor ids were appended with), so opening
-    the probe runs no parquet schema-inference job."""
+    the probe runs no parquet schema-inference job. The cell list is
+    planned as ``InSet`` over a referenced hash set
+    (:data:`lab3_lakehouse_spark.session.RUNTIME_CONF`), so the
+    probe's generated code does not depend on which cells it routes
+    to and later probes of a store compile nothing; a one-value list
+    is the exception (planned as ``=``, compiled once per value)."""
     from lab3_lakehouse_spark import stores
 
     schema = (

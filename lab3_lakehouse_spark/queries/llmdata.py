@@ -1500,7 +1500,7 @@ def ann_store_reindex_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     _util.scratch_dir — see its documented local-mode assumption)."""
     import shutil
 
-    from lab3_lakehouse_spark import stores
+    from lab3_lakehouse_spark import fs, stores
     from lab3_lakehouse_spark.queries._util import scratch_dir
 
     tune_session(spark)
@@ -1579,7 +1579,7 @@ def ann_store_reindex_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=False)  # feeds both exceptAll legs
 
         retired = stores.swap_root(spark, root, new_root)
-        shutil.rmtree(retired, ignore_errors=True)
+        fs.delete(spark, retired)
 
         # post-swap probe of the LIVE root — now the refit index
         store = sim_ops.ivfpq_store_topk(
@@ -1650,7 +1650,7 @@ def minhash_band_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     at call time; roots via _util.scratch_dir)."""
     import shutil
 
-    from lab3_lakehouse_spark import stores
+    from lab3_lakehouse_spark import fs, stores
     from lab3_lakehouse_spark.queries._util import scratch_dir
 
     tune_session(spark)
@@ -1699,7 +1699,7 @@ def minhash_band_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )                                 # renames new_root away
 
         retired = stores.swap_root(spark, root, new_root)
-        shutil.rmtree(retired, ignore_errors=True)
+        fs.delete(spark, retired)
 
         # post-swap probe of the LIVE path — now the rebanded tier
         live_cands = dedup_ops.minhash_lsh_candidates_from_bands(

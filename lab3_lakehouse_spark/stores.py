@@ -176,7 +176,12 @@ def pruned_read(
     """The probe's index read: a bounded membership list pushed as an
     ``IN (…)`` parquet filter onto the clustered tier — row groups
     outside the probe's keys are never read (plan-pinned per family on
-    THIS frame; a caller's localCheckpoint would hide the scan)."""
+    THIS frame; a caller's localCheckpoint would hide the scan). The
+    list compiles to a lookup in a referenced hash set
+    (:data:`lab3_lakehouse_spark.session.RUNTIME_CONF`), so a probe's
+    generated code does not depend on its values and a second probe
+    with other keys compiles nothing; a one-value list is the
+    exception (planned as ``=``, compiled once per value)."""
     return read_tier(spark, store_root, tier).filter(
         F.col(col).isin(list(values))
     )
@@ -241,17 +246,17 @@ def swap_root(spark, live_root: str, new_root: str) -> str:
 
 
 def snapshot_files(
-    store_root: str, tier: str | None = None
-) -> dict[str, tuple[int, float]]:
-    """(size, mtime) per parquet file under a tier (or the whole root)
-    — the shared harness behind the append-never-reads-store tests:
-    snapshot, append, snapshot again; every pre-existing file must be
-    byte-identical and the file set must grow."""
-    import glob
-    import os
-
+    spark, store_root: str, tier: str | None = None
+) -> dict[str, tuple[int, int]]:
+    """(size, mtime ms) per parquet file under a tier (or the whole
+    root), listed through :mod:`lab3_lakehouse_spark.fs` so URI roots
+    answer like plain paths — the shared harness behind the
+    append-never-reads-store tests: snapshot, append, snapshot again;
+    every pre-existing file must be byte-identical and the file set
+    must grow."""
     base = tier_path(store_root, tier) if tier else store_root
     return {
-        p: (os.path.getsize(p), os.path.getmtime(p))
-        for p in glob.glob(f"{base}/**/*.parquet", recursive=True)
+        p: sig
+        for p, sig in fs.list_files(spark, base).items()
+        if p.endswith(".parquet")
     }

@@ -907,6 +907,109 @@ def test_ivfpq_store_probe_prunes_to_routed_cells(
     assert out.count() == 6
 
 
+def _compiles(spark) -> int:
+    """Janino compilations so far in this JVM: the sample count of
+    Spark's ``CodegenMetrics`` compile-time histogram (one sample per
+    generated class compiled, i.e. per codegen cache miss)."""
+    return (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+
+
+def test_ivfpq_store_probe_reuses_compiled_code_across_cell_sets(
+    spark, clustered_vectors, tmp_path
+):
+    """A second probe of one store, routed to a different cell set,
+    compiles no new class: the routed ``__cell IN (…)`` list is planned
+    as ``InSet`` and compiled to a lookup in a referenced hash set
+    (``spark.sql.optimizer.inSetConversionThreshold`` /
+    ``inSetSwitchThreshold`` = 0 in ``session.RUNTIME_CONF``), so the
+    probe's generated code does not depend on its values. Both confs
+    are internal to Spark 4.1; an upgrade that drops either makes the
+    values part of the code again and fails here. Assumes the lists
+    have 2+ values: a one-value list is planned as ``=`` and still
+    compiles once per value. The second probe still pushes
+    ``In(__cell, …)`` to the parquet scan."""
+    emb = clustered_vectors
+    root = str(tmp_path / "ivfpq")
+    sim_ops.ivfpq_store_init(
+        root, emb, "vec_id", "embedding",
+        n_centroids=8, dim=32, m=8, n_codes=16,
+    )
+    sim_ops.ivfpq_store_append(spark, root, emb, "vec_id", "embedding")
+    queries = emb.filter(F.col("vec_id") < 2)
+
+    def probe(n_probe):
+        return sim_ops.ivfpq_store_topk(
+            spark, root, emb, queries, "vec_id", "embedding",
+            k=3, n_probe=n_probe, rerank=30,
+        )
+
+    assert len(probe(2).collect()) == 6
+    second = probe(3)
+    before = _compiles(spark)
+    assert len(second.collect()) == 6
+    assert _compiles(spark) == before
+    plan = second._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters" in plan and "In(__cell" in plan, plan
+
+
+def test_pruned_read_reuses_compiled_code_across_value_sets(
+    spark, tmp_path
+):
+    """``stores.pruned_read`` of one int-keyed tier with two different
+    value sets: the second read compiles nothing, because the
+    membership list compiles to a referenced hash set, not to code
+    holding the values (same confs and Spark 4.1 assumption as the
+    IVF-PQ pin above; the lists have 2+ values, since a one-value list
+    is planned as ``=`` and compiles once per value)."""
+    from lab3_lakehouse_spark import stores
+
+    root = str(tmp_path / "store")
+    stores.append_rows(
+        spark.range(200).select(
+            (F.col("id") % 20).cast("int").alias("k"), "id"
+        ),
+        root, "data", cluster_expr=F.col("k"), buckets=2, sort_cols=("k",),
+    )
+    first = stores.pruned_read(spark, root, "data", "k", [1, 2])
+    assert sorted(r.k for r in first.collect()) == [1] * 10 + [2] * 10
+    second = stores.pruned_read(spark, root, "data", "k", [3, 5, 7])
+    before = _compiles(spark)
+    assert sorted({r.k for r in second.collect()}) == [3, 5, 7]
+    assert _compiles(spark) == before
+
+
+def test_tune_session_plans_literal_in_lists_as_referenced_sets(spark):
+    """``tune_session`` applies both InSet confs to a session that has
+    neither: a fresh ``newSession()`` with the two keys unset reads
+    Spark's defaults (10 and 400) and plans a 2-value literal IN as
+    ``In``; after ``tune_session`` it reads 0 and 0 and plans the same
+    list as ``InSet``. Spark 4.1 assumption: an upgrade that drops
+    ``inSetConversionThreshold`` leaves the plan at ``In`` and fails
+    here."""
+    from lab3_lakehouse_spark.session import tune_session
+
+    keys = (
+        "spark.sql.optimizer.inSetConversionThreshold",
+        "spark.sql.optimizer.inSetSwitchThreshold",
+    )
+    vanilla = spark.newSession()
+    for k in keys:
+        vanilla.conf.unset(k)
+
+    def optimized(s):
+        df = s.range(5).filter(F.col("id").isin(1, 3))
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert [vanilla.conf.get(k) for k in keys] == ["10", "400"]
+    assert "INSET" not in optimized(vanilla)
+    tune_session(vanilla)
+    assert [vanilla.conf.get(k) for k in keys] == ["0", "0"]
+    assert "INSET" in optimized(vanilla)
+
+
 # ---------------------------------------------- media signature store ----
 
 

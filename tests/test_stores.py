@@ -142,28 +142,40 @@ def _family_actions(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("family", sorted(stores.FAMILIES))
-def test_append_never_reads_or_rewrites_store(spark, tmp_path, family):
+@pytest.mark.parametrize(
+    "family,scheme",
+    [pytest.param(f, "", id=f) for f in sorted(stores.FAMILIES)]
+    + [
+        pytest.param(f, "file://", id=f"{f}-file_uri")
+        for f in sorted(stores.FAMILIES)
+    ],
+)
+def test_append_never_reads_or_rewrites_store(
+    spark, tmp_path, family, scheme
+):
     """The lifecycle invariant every family signs up for by being in
     stores.FAMILIES: a second append only ADDS parquet files to every
     data tier — each file the first append wrote is byte-identical
     afterwards (size+mtime), proving appends neither read nor rewrite
     the store. A family added to FAMILIES without wiring an action
     here fails loudly (KeyError) rather than silently escaping the
-    contract."""
+    contract. Each family runs on a plain path (id ``[family]``) and
+    on a ``file://`` root (``[family-file_uri]``); the snapshot must
+    see files on both, or two empty snapshots would compare equal."""
     actions = _family_actions(spark, tmp_path)
     init, append = actions[family]
     spec = stores.FAMILIES[family]
-    root = str(tmp_path / family)
+    root = scheme + str(tmp_path / family)
     if init is not None:
         init(root)
     append(root, 0)
     before = {
-        t: stores.snapshot_files(root, t) for t in spec.data_tiers
+        t: stores.snapshot_files(spark, root, t) for t in spec.data_tiers
     }
+    assert all(before.values()), f"{family}: snapshot saw no files"
     append(root, 1)
     for tier in spec.data_tiers:
-        after = stores.snapshot_files(root, tier)
+        after = stores.snapshot_files(spark, root, tier)
         for path, sig in before[tier].items():
             assert after[path] == sig, (
                 f"{family}: append rewrote existing file {path}"
@@ -280,16 +292,14 @@ def test_swap_root_promotes_gc_root_with_identical_probes(
     root, swap it over the live path, and the probe against the LIVE
     path (the one consumers keep configured) returns exactly the
     pre-swap results; the retired root keeps the fragmented tiers
-    intact so the swap is reversible. A file:// root swaps like a
-    plain path (snapshot_files is a local glob, so it gets the plain
-    path)."""
-    import os
-
+    intact so the swap is reversible. A file:// root swaps, and its
+    retired root is deleted, like a plain path."""
+    from lab3_lakehouse_spark import fs
     from lab3_lakehouse_spark.operators import text as text_ops
 
     docs = _docs(spark)
-    live_dir, gc_dir = str(tmp_path / "bm25_live"), str(tmp_path / "bm25_gc")
-    live, gc = scheme + live_dir, scheme + gc_dir
+    live = scheme + str(tmp_path / "bm25_live")
+    gc = scheme + str(tmp_path / "bm25_gc")
     for part in (0, 1):
         text_ops.bm25_append_batch(
             live, docs.filter(F.col("doc_id") % 2 == part)
@@ -302,7 +312,8 @@ def test_swap_root_promotes_gc_root_with_identical_probes(
         tuple(r)
         for r in text_ops.bm25_topk_from_store(spark, live, q, k=5).collect()
     )
-    n_live_files = len(stores.snapshot_files(live_dir))
+    n_live_files = len(stores.snapshot_files(spark, live))
+    assert n_live_files > 0
     text_ops.bm25_compact_store(spark, live, gc, buckets=4)
     retired = stores.swap_root(spark, live, gc)
     assert retired == live + ".retired"
@@ -313,8 +324,12 @@ def test_swap_root_promotes_gc_root_with_identical_probes(
     )
     assert post == pre and len(post) > 0
     # the fragmented store is intact under the retired path (reversible)
-    assert len(stores.snapshot_files(live_dir + ".retired")) == n_live_files
-    assert not os.path.exists(gc_dir)
+    assert len(stores.snapshot_files(spark, retired)) == n_live_files
+    assert not fs.exists(spark, gc)
+    # the caller's cleanup once satisfied; deleting again is a no-op
+    fs.delete(spark, retired)
+    assert not fs.exists(spark, retired)
+    fs.delete(spark, retired)
 
 
 @pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
@@ -817,9 +832,9 @@ def test_minhash_rebalance_equals_direct_and_preserves_candidates(
         ).collect()
     }
 
-    before = stores.snapshot_files(src)
+    before = stores.snapshot_files(spark, src)
     dedup_ops.rebalance_signature_store(spark, src, dst, bands=32)
-    assert stores.snapshot_files(src) == before  # live store untouched
+    assert stores.snapshot_files(spark, src) == before  # live store untouched
 
     key = ["__id", "band", "bh"]
     got = sorted(
