@@ -10,7 +10,8 @@ Reference pipeline (src/etl_pipeline.py:196-201):
 Differences by design (SURVEY §7):
     - explicit schema instead of inferSchema (single-pass read),
     - one `observe`-based quality report instead of 3 extra count() scans,
-    - clustering via Morton/linear sort (Delta Z-order when available),
+    - in-place clustering via Morton/linear sort (Delta Z-order when
+      available),
     - distributed spark.ml RF instead of toPandas → sklearn.
 
 Run: ``python examples/reference_pipeline.py [csv_path] [work_dir]``
@@ -115,6 +116,8 @@ def run_pipeline(spark, csv_path: str, work: str) -> dict:
     typed = ingest.apply_casts(b, SILVER_CASTS)
     clean, obs = quality.filter_with_metrics(typed, list(quality_predicates(typed).values()))
     materialize(clean, eng.tier_path("silver/trips_clean"))
+    # Z-order silver in place (etl_pipeline.py:87-88): the gold builds
+    # below read the clustered layout, and no copy is left beside it
     eng.optimize("silver/trips_clean", zorder_by=["PULocationID", "DOLocationID"])
     metrics = dict(obs.get)
 

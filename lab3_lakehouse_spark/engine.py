@@ -54,6 +54,11 @@ class LakehouseEngine:
         return medallion.read_tier(self.spark, self.tier_path(rel), fmt)
 
     def optimize(self, rel: str, zorder_by: list[str], **kwargs) -> str:
+        """Z-order the tier ``rel`` in place
+        (:func:`~lab3_lakehouse_spark.sources.medallion.optimize_table`):
+        later reads of ``rel`` scan the clustered layout; a frame read
+        from it before the call must be read again. Returns the
+        strategy applied."""
         return medallion.optimize_table(
             self.spark, self.tier_path(rel), zorder_by, **kwargs
         )

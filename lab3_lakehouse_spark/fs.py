@@ -43,6 +43,37 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
         raise OSError(f"FileSystem.rename({src}, {dst}) failed")
 
 
+def swap(spark: SparkSession, live: str, new: str) -> str:
+    """Put the directory ``new`` in place of ``live`` by two
+    :func:`rename` calls, neither of which overwrites::
+
+        (1) live → live + ".retired"
+        (2) new  → live
+
+    Returns the retired path; the caller deletes it. No state loses
+    data: a crash between (1) and (2) leaves ``{live}.retired`` and
+    ``new`` intact (recovery: rename either back into place), and (2)
+    failing renames (1) back before re-raising, so ``live`` is never
+    left missing. Refuses before any rename if a previous swap's
+    retired path is still present (stacking retired copies is how data
+    loss hides) or if ``new`` is no directory."""
+    retired = live.rstrip("/") + ".retired"
+    if exists(spark, retired):
+        raise FileExistsError(
+            f"{retired} exists — finish (delete) or recover the previous "
+            "swap before running another"
+        )
+    if not is_dir(spark, new):
+        raise FileNotFoundError(f"{new} is not a directory")
+    rename(spark, live, retired)
+    try:
+        rename(spark, new, live)
+    except Exception:
+        rename(spark, retired, live)  # rollback: never a half-swap
+        raise
+    return retired
+
+
 def delete(spark: SparkSession, path: str) -> None:
     """Remove ``path`` and everything under it; a missing path is a
     no-op. Raises ``OSError`` if the FileSystem reports failure and the

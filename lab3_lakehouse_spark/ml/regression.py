@@ -16,7 +16,8 @@ RF with 20 trees, seed 42, MAE/RMSE/R²) but end-to-end in ``spark.ml``:
 - M2: ``randomSplit([0.8, 0.2], seed=42)`` (sampling differs from
   sklearn's exact-count split; proportions match in expectation).
 - M3: ``pyspark.ml.regression.RandomForestRegressor(numTrees=20,
-  seed=42)`` + ``RegressionEvaluator`` mae/rmse/r2.
+  seed=42)``; MAE/RMSE/R² as ``RegressionEvaluator`` defines them,
+  with the test-row count, in one aggregate over the predictions.
 
 MLflow logging (``etl_pipeline.py:158-177``) is optional: enabled only
 if mlflow imports (not in this container).
@@ -24,6 +25,7 @@ if mlflow imports (not in this container).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -67,7 +69,6 @@ def train_random_forest(
     seed: int = 42,
 ) -> FitResult:
     """M2+M3: split, fit, evaluate — all distributed."""
-    from pyspark.ml.evaluation import RegressionEvaluator
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import RandomForestRegressor
 
@@ -76,7 +77,7 @@ def train_random_forest(
     # cache BEFORE randomSplit: split sampling is per-partition, and an
     # uncached upstream agg can recompute with different row order per
     # action, silently losing/duplicating rows between train and test;
-    # released once the last metric and count are in, so a call leaves
+    # released once the metrics and counts are in, so a call leaves
     # nothing in executor storage
     vec = assembler.transform(features).select("features", "label").cache()
     try:
@@ -84,15 +85,20 @@ def train_random_forest(
         model = RandomForestRegressor(
             numTrees=num_trees, seed=seed, labelCol="label", featuresCol="features"
         ).fit(train)
-        pred = model.transform(test)
-        ev = RegressionEvaluator(labelCol="label", predictionCol="prediction")
+        err = F.col("prediction") - F.col("label")
+        # RegressionEvaluator's mae/rmse/r2 and n_test in one job:
+        # R² = 1 − SS_err/SS_tot = 1 − MSE / var_pop(label)
+        n, mae, mse, var = model.transform(test).agg(
+            F.count(F.lit(1)), F.avg(F.abs(err)), F.avg(err * err),
+            F.var_pop("label"),
+        ).first()
         result = FitResult(
             model=model,
-            mae=ev.setMetricName("mae").evaluate(pred),
-            rmse=ev.setMetricName("rmse").evaluate(pred),
-            r2=ev.setMetricName("r2").evaluate(pred),
+            mae=mae,
+            rmse=math.sqrt(mse),
+            r2=1.0 - mse / var if var else float("nan"),
             n_train=train.count(),
-            n_test=test.count(),
+            n_test=n,
         )
     finally:
         vec.unpersist()

@@ -14,11 +14,14 @@ and restartable. The engine keeps that property but generalizes:
   (``etl_pipeline.py:64,118`` — a fixed constant is always wrong in one
   direction at 100 TB),
 - Z-order (X2, ``etl_pipeline.py:87-88``) maps to Delta
-  ``executeZOrderBy`` when Delta is present; on plain parquet we apply
-  *linear clustering* (``repartitionByRange`` + ``sortWithinPartitions``
-  on the cluster columns), which gives parquet min/max row-group
-  skipping on the same columns — the same data-skipping goal by
-  parquet-native means.
+  ``executeZOrderBy`` when Delta is present. On plain parquet,
+  :func:`optimize_table` rewrites the tier *in place*, as Delta's
+  ``OPTIMIZE`` does: range-partitioned and sorted on a Morton key over
+  the Z-order columns (a plain range sort for one column), within each
+  Hive partition, then staged and swapped in over the tier. That gives
+  parquet min/max file and row-group skipping on every Z-order column
+  — the same data-skipping goal by parquet-native means — and the
+  tier's readers scan the clustered layout.
 
 Parquet tiers written here carry their data schema in a
 ``_tier_schema.json`` record next to the data files (Delta keeps the
@@ -31,6 +34,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from typing import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,8 +63,9 @@ def _layout(
     cluster_by: list[str] | None,
     target_partitions: int | None,
 ) -> DataFrame:
-    """The write-layout stage of :func:`materialize`, factored out so
-    its physical plan is independently inspectable (plans/r15)."""
+    """The write-layout stage of :func:`materialize` and
+    :func:`optimize_table`, factored out so its physical plan is
+    independently inspectable (plans/r15)."""
     out = df
     if cluster_by:
         cols = [F.col(c) for c in cluster_by]
@@ -129,9 +134,10 @@ def materialize(
     only a whole-tier overwrite writes a new one afterwards: after an
     append or a dynamic partition overwrite the tier has no record and
     reads infer. ``merge_into``, ``compact_tier`` and
-    ``optimize_table`` record what they rewrite. A foreign
-    ``df.write.mode("overwrite")`` deletes the directory, record
-    included; a foreign writer that APPENDS to a tier must delete
+    ``optimize_table`` rewrite the tier in place and record what they
+    wrote: the record is written with the staged rewrite and moves
+    into place with it. A foreign ``df.write.mode("overwrite")``
+    deletes the directory, record included; a foreign writer that APPENDS to a tier must delete
     ``_tier_schema.json`` itself, or reads keep the old schema. Delta
     tiers keep no record (their log is one), and neither do Spark
     Connect sessions (no JVM handle to the filesystem): those reads
@@ -239,10 +245,12 @@ def merge_into(
 
     With delta-spark installed this delegates to the transactional
     ``DeltaTable.merge`` (file-pruned, ACID). On parquet tiers it is a
-    read → ``operators.merge.merge_upsert`` → rewrite: correct but
-    non-transactional and full-rewrite — the honest floor documented in
-    operators/merge.py. Change batches are usually ≪ snapshot, so the
-    source defaults to broadcast and the snapshot never shuffles.
+    read → ``operators.merge.merge_upsert`` → staged rewrite swapped in
+    by :func:`_rewrite`: correct but non-transactional and full-rewrite
+    — the honest floor documented in operators/merge.py. A frame
+    planned on the tier before the call must not be read after it.
+    Change batches are usually ≪ snapshot, so the source defaults to
+    broadcast and the snapshot never shuffles.
     """
     from lab3_lakehouse_spark.operators.merge import merge_upsert
 
@@ -261,20 +269,47 @@ def merge_into(
         snapshot, source, keys,
         delete_condition=delete_condition, broadcast_source=broadcast_source,
     )
-    # parquet has no transaction log: Spark cannot overwrite a path it
-    # is reading from, so stage the rewrite next to the tier and swap
+    _rewrite(merged, path, fmt)
+
+
+def _rewrite(
+    df: DataFrame, path: str, fmt: str, partition_by: list[str] | None = None
+) -> None:
+    """Replace the tier at ``path`` with ``df`` — the staged swap of
+    ``merge_into``, ``compact_tier`` and ``optimize_table``. Parquet has
+    no transaction log and Spark cannot overwrite a path it is reading
+    from, so ``df`` is written (schema record included) to
+    ``{path}.__staging__`` and put in place by
+    :func:`lab3_lakehouse_spark.fs.swap`; the old tier, renamed aside,
+    is deleted only once its replacement is at ``path``. If the swap
+    fails, the old tier is back at ``path`` and the next rewrite
+    overwrites the staged copy. Between the two renames ``path`` is
+    briefly absent — the non-transactional cost vs Delta — and a frame
+    planned on the old tier lists files the swap deletes."""
+    spark = df.sparkSession
     staging = path.rstrip("/") + ".__staging__"
-    _save(merged, staging, fmt)
-    _swap_in(spark, staging, path)
+    _save(df, staging, fmt, partition_by=partition_by)
+    fs.delete(spark, fs.swap(spark, path, staging))
 
 
-def _swap_in(spark: SparkSession, staging: str, path: str) -> None:
-    """Replace the tier at ``path`` with ``staging``: delete, then
-    rename — the window between them is the non-transactional cost vs
-    Delta; a failed rename raises with the data intact in ``staging``."""
-    fsys, tier = fs.handle(spark, path)
-    fsys.delete(tier, True)
-    fs.rename(spark, staging, path)
+def _partition_columns(spark: SparkSession, path: str) -> list[str]:
+    """The tier's Hive partition columns, outermost first, from the
+    ``k=v`` directory names along one path down from ``path`` — a few
+    listings, no Spark job. Names starting ``_`` or ``.`` are skipped,
+    as Spark's file index skips them."""
+    fsys, d = fs.handle(spark, path)
+    cols: list[str] = []
+    while True:
+        sub = next(
+            (st.getPath() for st in fsys.listStatus(d)
+             if st.isDirectory() and "=" in st.getPath().getName()
+             and not st.getPath().getName().startswith(("_", "."))),
+            None,
+        )
+        if sub is None:
+            return cols
+        cols.append(unquote(sub.getName().split("=", 1)[0]))
+        d = sub
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -360,7 +395,7 @@ def compact_tier(
     from the filesystem, the frame is repartitioned to
     ``ceil(bytes / target)`` output files (range-partitioned when
     ``sort_within`` is given, preserving cluster-by layouts), staged
-    next to the tier, and swapped via same-filesystem rename — the
+    next to the tier and swapped in by :func:`_rewrite` — the
     merge_into pattern, same non-transactional window.
 
     Returns ``{"files_before", "files_after", "bytes", "n_target"}``
@@ -398,9 +433,7 @@ def compact_tier(
         out = df.repartition(n_target, *[F.col(c) for c in partition_by])
     else:
         out = df.repartition(n_target)
-    staging = path.rstrip("/") + ".__compacting__"
-    _save(out, staging, fmt, partition_by=partition_by)
-    _swap_in(spark, staging, path)
+    _rewrite(out, path, fmt, partition_by=partition_by)
     return {
         "files_before": before,
         "files_after": _data_files(),
@@ -468,31 +501,37 @@ def optimize_table(
     fmt: str = "parquet",
     target_partitions: int | None = None,
 ) -> str:
-    """X2: layout optimization (generalizes ``etl_pipeline.py:87-88``).
-    Delta → ``OPTIMIZE ... ZORDER BY``; parquet → rewrite clustered by a
-    Morton key over the same columns (single column degenerates to a
-    range sort). Returns the strategy applied (observability/tests)."""
+    """X2: layout optimization in place (generalizes
+    ``etl_pipeline.py:87-88``): afterwards the tier at ``path`` holds
+    the clustered layout. Returns the strategy applied.
+
+    Delta → ``OPTIMIZE ... ZORDER BY``. Parquet → a rewrite
+    range-partitioned and sorted on a Morton key over ``zorder_by`` (a
+    single column degenerates to a range sort on it), staged next to
+    the tier and swapped in by :func:`_rewrite`, as ``merge_into`` and
+    ``compact_tier`` do, so no copy is left beside it. A Hive-
+    partitioned tier keeps its partition columns and ``k=v``
+    directories (read from its directory names, no job), with rows
+    clustered within each partition. The rewrite records its schema,
+    so the tier still opens without a job. Like ``merge_into``: a frame
+    planned on the tier before the call must not be read after it (its
+    files are gone) — read the tier again."""
     if fmt == "delta" and _delta_available():
         from delta.tables import DeltaTable
 
         DeltaTable.forPath(spark, path).optimize().executeZOrderBy(zorder_by)
         return "delta-zorder"
+    parts = _partition_columns(spark, path)
     df = read_tier(spark, path, fmt)
     if len(zorder_by) == 1:
-        materialize(
-            df, path + "__clustered", fmt=fmt, cluster_by=zorder_by,
-            target_partitions=target_partitions,
-        )
-        return "parquet-linear-cluster"
-    keyed, key = morton_key(df, zorder_by)
-    parts = [target_partitions] if target_partitions else []
-    clustered = (
-        keyed.repartitionByRange(*parts, F.col(key))
-        .sortWithinPartitions(key)
-        .drop(key)
-    )
-    _save(clustered, path + "__clustered", fmt)
-    return "parquet-morton-cluster"
+        strategy = "parquet-linear-cluster"
+        clustered = _layout(df, None, parts + zorder_by, target_partitions)
+    else:
+        strategy = "parquet-morton-cluster"
+        keyed, key = morton_key(df, zorder_by)
+        clustered = _layout(keyed, None, parts + [key], target_partitions).drop(key)
+    _rewrite(clustered, path, fmt, partition_by=parts)
+    return strategy
 
 
 @dataclass

@@ -4,8 +4,9 @@ O(1) rollback without Delta Lake.
 The reference keeps every tier in Delta (`src/etl_pipeline.py:36-41`),
 which transparently provides versioned snapshots and atomic overwrite.
 This container has no ``delta-spark``, and the plain-parquet fallback in
-``medallion.merge_into`` documents its cost honestly: a delete→rename
-window where a concurrent reader can catch the tier half-swapped. This
+``medallion.merge_into`` documents its cost honestly: a window between
+two renames where the tier path is briefly absent, and a reader that
+planned on the old tier loses its files once the swap deletes them. This
 module closes that gap with parquet + filesystem primitives only:
 
 - every write lands in a NEW immutable snapshot directory
@@ -142,7 +143,7 @@ def merge_into_versioned(
     """MERGE as a new snapshot: read the current version, apply
     ``operators.merge.merge_upsert``, write v+1, publish. Unlike the
     in-place ``medallion.merge_into`` parquet path there is NO
-    delete→rename window — concurrent readers keep the old snapshot
+    swap window — concurrent readers keep the old snapshot
     until the marker flips. Returns the new version."""
     from lab3_lakehouse_spark.operators.merge import merge_upsert
 

@@ -210,39 +210,18 @@ def gc_write(
 
 def swap_root(spark, live_root: str, new_root: str) -> str:
     """Promote a GC'd store root over the live one — the swap-in step
-    the :func:`gc_write` contract leaves to the caller. Two directory
-    renames through :func:`lab3_lakehouse_spark.fs.rename`, which never
-    overwrites and raises on any failure, on any URI scheme::
-
-        (1) live_root  → live_root + ".retired"
-        (2) new_root   → live_root
-
-    Returns the retired path; the caller deletes it once satisfied
-    (keeping it makes the swap trivially reversible). No state loses
-    data: a crash between (1) and (2) leaves ``{live}.retired`` and
-    ``new_root`` intact (recovery: rename either back into place), and
-    (2) failing renames (1) back, so callers never observe a half-swap.
-    A probe that plans DURING the swap window can fail on the
-    briefly-absent path and must retry; on an object store, where a
-    directory rename is a copy, the equivalent step is the catalog
-    location repoint, which has no window. Refuses to run while a
-    previous swap's retired root is present (silently stacking retired
-    roots is how data loss hides) or if ``new_root`` is no directory."""
-    retired = live_root.rstrip("/") + ".retired"
-    if fs.exists(spark, retired):
-        raise FileExistsError(
-            f"{retired} exists — finish (delete) or recover the previous "
-            "swap before running another"
-        )
-    if not fs.is_dir(spark, new_root):
-        raise FileNotFoundError(f"new root {new_root} is not a directory")
-    fs.rename(spark, live_root, retired)
-    try:
-        fs.rename(spark, new_root, live_root)
-    except Exception:
-        fs.rename(spark, retired, live_root)  # rollback: never a half-swap
-        raise
-    return retired
+    the :func:`gc_write` contract leaves to the caller — by
+    :func:`lab3_lakehouse_spark.fs.swap`: ``live_root`` is renamed to
+    ``live_root + ".retired"``, then ``new_root`` to ``live_root``, with
+    rollback if the second rename fails. Returns the retired path; the
+    caller deletes it once satisfied (keeping it makes the swap
+    trivially reversible). A probe that plans DURING the swap window
+    can fail on the briefly-absent path and must retry; on an object
+    store, where a directory rename is a copy, the equivalent step is
+    the catalog location repoint, which has no window. Refuses to run
+    while a previous swap's retired root is present or if ``new_root``
+    is no directory."""
+    return fs.swap(spark, live_root, new_root)
 
 
 def snapshot_files(

@@ -45,8 +45,8 @@ def test_optimize_table_reports_parquet_strategy_without_delta(spark, tmp_path):
     ).write.parquet(p)
     strategy = medallion.optimize_table(spark, p, ["a", "b"], fmt="parquet")
     assert strategy == "parquet-morton-cluster"
-    n = spark.read.parquet(p + "__clustered").count()
-    assert n == 100
+    assert spark.read.parquet(p).count() == 100
+    assert [x.name for x in tmp_path.iterdir()] == ["t"]
 
 
 # ------------------------------------------------------- delta branches --

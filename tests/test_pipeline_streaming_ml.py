@@ -165,7 +165,9 @@ def test_optimize_table_parquet_clustering(spark, sf_small, tmpdir):
     materialize(ev, f"{tmpdir}/t")
     strategy = optimize_table(spark, f"{tmpdir}/t", zorder_by=["user_id"])
     assert strategy == "parquet-linear-cluster"
-    clustered = read_tier(spark, f"{tmpdir}/t__clustered")
+    # rewritten in place: the tier itself holds the clustered layout
+    assert os.listdir(tmpdir) == ["t"]
+    clustered = read_tier(spark, f"{tmpdir}/t")
     assert clustered.count() == ev.count()
     # clustering means each file's user_id range is narrow: verify rows
     # are sorted within partitions by checking per-file min/max overlap
@@ -250,6 +252,33 @@ def test_rf_training_distributed(spark, sf_small):
     assert r.r2 <= 1.0
 
 
+def test_rf_metrics_equal_regression_evaluator(spark):
+    """The one-aggregate metrics equal RegressionEvaluator's mae, rmse
+    and r2 on the same seeded test split, and n_test is its size."""
+    from pyspark.ml.evaluation import RegressionEvaluator
+    from pyspark.ml.feature import VectorAssembler
+
+    feats = spark.range(400).select(
+        F.col("id").cast("double").alias("x"),
+        (F.col("id") % 7).cast("double").alias("z"),
+        (F.col("id") * 0.5 + F.hash("id") % 97).cast("double").alias("label"),
+    )
+    r = ml.train_random_forest(feats, num_trees=3)
+    vec = VectorAssembler(inputCols=["x", "z"], outputCol="features").transform(
+        feats
+    ).select("features", "label").cache()
+    try:
+        _, test = vec.randomSplit([0.8, 0.2], seed=42)
+        pred = r.model.transform(test)
+        ev = RegressionEvaluator(labelCol="label", predictionCol="prediction")
+        assert r.n_test == test.count()
+        for name in ("mae", "rmse", "r2"):
+            want = ev.setMetricName(name).evaluate(pred)
+            assert getattr(r, name) == pytest.approx(want, rel=1e-9), name
+    finally:
+        vec.unpersist()
+
+
 def test_rf_training_releases_its_cache(spark):
     """train_random_forest caches its assembled frame for the split and
     unpersists it before returning: the session holds as many cached
@@ -323,7 +352,8 @@ def test_morton_zorder_bounds_both_columns(spark, sf_small, tmpdir):
         spark, f"{tmpdir}/t", zorder_by=["user_id", "value"], target_partitions=6
     )
     assert strategy == "parquet-morton-cluster"
-    clustered = read_tier(spark, f"{tmpdir}/t__clustered")
+    assert os.listdir(tmpdir) == ["t"]
+    clustered = read_tier(spark, f"{tmpdir}/t")
     assert clustered.count() == ev.count()
 
     stats = (

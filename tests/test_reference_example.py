@@ -31,9 +31,10 @@ def test_reference_pipeline_end_to_end(spark):
         # reads through it exactly as parquet inference does
         from lab3_lakehouse_spark.sources.medallion import SCHEMA_FILE, read_tier
 
+        # OPTIMIZE rewrote silver in place: no copy beside it
+        assert os.listdir(f"{work}/silver") == ["trips_clean"]
         for tier in ("bronze/trips", "silver/trips_clean",
-                     "silver/trips_clean__clustered", "gold/daily_revenue",
-                     "gold/hourly_demand"):
+                     "gold/daily_revenue", "gold/hourly_demand"):
             path = f"{work}/{tier}"
             assert os.path.exists(f"{path}/{SCHEMA_FILE}"), tier
             got, want = read_tier(spark, path), spark.read.parquet(path)

@@ -98,25 +98,96 @@ def test_read_tier_runs_no_job(spark, typed, tmp_path):
 
 
 def test_rewrites_record_what_they_wrote(spark, typed, tmp_path):
-    """merge_into, compact_tier and both optimize_table branches leave
-    a tier that opens without a job and reads as inference does."""
+    """merge_into, compact_tier and both optimize_table branches rewrite
+    the tier in place and leave it opening without a job and reading
+    as inference does, with nothing left beside it."""
     path = str(tmp_path / "tier")
     med.materialize(typed.drop("mp"), path)
     change = typed.drop("mp").filter("a < 2").withColumn("b", F.col("b") + 1)
     med.merge_into(spark, path, change, ["a"])
     med.compact_tier(spark, path, partition_by=["digits"])
-    med.optimize_table(spark, path, ["b"])
-    for p in (path, path + "__clustered"):
-        _, n = _jobs(spark, lambda p=p: med.read_tier(spark, p))
-        assert n == 0, p
-        _reads_as_inference(spark, p)
+    assert med.optimize_table(spark, path, ["b"]) == "parquet-linear-cluster"
+    _, n = _jobs(spark, lambda: med.read_tier(spark, path))
+    assert n == 0
+    _reads_as_inference(spark, path)
     assert med.read_tier(spark, path).filter("a = 1").first().b == 11
     morton = str(tmp_path / "morton")
     med.materialize(typed.drop("mp"), morton)
     assert med.optimize_table(spark, morton, ["a", "b"]) == "parquet-morton-cluster"
-    _, n = _jobs(spark, lambda: med.read_tier(spark, morton + "__clustered"))
+    _, n = _jobs(spark, lambda: med.read_tier(spark, morton))
     assert n == 0
-    _reads_as_inference(spark, morton + "__clustered")
+    _reads_as_inference(spark, morton)
+    assert sorted(os.listdir(tmp_path)) == ["morton", "tier"]
+
+
+def _data_dirs(root) -> list[str]:
+    """Directories under ``root`` holding parquet files, relative."""
+    return sorted(
+        os.path.relpath(d, root)
+        for d, _, files in os.walk(root)
+        if any(f.endswith(".parquet") for f in files)
+    )
+
+
+@pytest.mark.parametrize("parts", [None, ["digits", "a"]], ids=["flat", "partitioned"])
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_optimize_table_rewrites_the_tier_in_place(spark, typed, tmp_path, scheme, parts):
+    """Parquet OPTIMIZE replaces the tier at its own path: the same rows
+    and columns, the same ``k=v`` directories, the schema record kept
+    (a 0-job read), and no ``__clustered``, staging or retired path
+    beside it."""
+    local = tmp_path / "tier"
+    path = f"{scheme}{local}"
+    med.materialize(typed, path, partition_by=parts)
+    dirs = _data_dirs(local)
+    before = med.read_tier(spark, path)
+    want_cols, want = before.columns, sorted(map(repr, before.collect()))
+    assert med.optimize_table(spark, path, ["b", "dec"]) == "parquet-morton-cluster"
+    assert os.listdir(tmp_path) == ["tier"]
+    assert os.path.exists(_record(path))
+    got, n = _jobs(spark, lambda: med.read_tier(spark, path))
+    assert n == 0
+    assert got.columns == want_cols
+    assert sorted(map(repr, got.collect())) == want
+    assert _data_dirs(local) == dirs
+    _reads_as_inference(spark, path)
+
+
+@pytest.mark.parametrize("rewrite", ["merge", "compact", "optimize"])
+def test_failed_swap_leaves_the_live_tier(spark, typed, tmp_path, monkeypatch, rewrite):
+    """If the rename that puts a rewrite in place fails, the live tier,
+    already renamed aside, is renamed back: it is whole at its path and
+    reads without a job, and no retired copy is left. The next rewrite
+    replaces the stale staged copy."""
+    from lab3_lakehouse_spark import fs
+
+    path = str(tmp_path / "tier")
+    base = typed.drop("mp")
+    med.materialize(base, path, partition_by=["digits"])
+    want = sorted(map(repr, med.read_tier(spark, path).collect()))
+    run = {
+        "merge": lambda: med.merge_into(spark, path, base.filter("a < 2"), ["a"]),
+        "compact": lambda: med.compact_tier(spark, path, partition_by=["digits"]),
+        "optimize": lambda: med.optimize_table(spark, path, ["b", "dec"]),
+    }[rewrite]
+    rename = fs.rename
+
+    def staged_rename_fails(spark, src, dst):
+        if src.endswith(".__staging__"):
+            raise OSError("injected rename failure")
+        rename(spark, src, dst)
+
+    monkeypatch.setattr(fs, "rename", staged_rename_fails)
+    with pytest.raises(OSError, match="injected"):
+        run()
+    monkeypatch.undo()
+    got, n = _jobs(spark, lambda: med.read_tier(spark, path))
+    assert n == 0
+    assert sorted(map(repr, got.collect())) == want
+    assert not os.path.exists(path + ".retired")
+    run()
+    assert os.listdir(tmp_path) == ["tier"]
+    assert sorted(map(repr, med.read_tier(spark, path).collect())) == want
 
 
 def test_append_drops_the_record(spark, typed, tmp_path):
